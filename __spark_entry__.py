@@ -3151,7 +3151,12 @@ def _q_streaming_clip_graph(spark, sf_dir):
     row-for-row against `SELECT ... FROM documents`."""
     import tempfile
 
-    from dataflow_flex_templates_spark.streaming.job import ClipGraphJob
+    from dataflow_flex_templates_spark.streaming.clip_graph import (
+        clip_graph_spec,
+        clips_spark_schema,
+        prepare_clips,
+    )
+    from dataflow_flex_templates_spark.streaming.spec_stream import SpecStreamJob
     from dataflow_flex_templates_spark.testing.clips import make_doc_clips_df
 
     _load(spark, sf_dir)
@@ -3159,15 +3164,15 @@ def _q_streaming_clip_graph(spark, sf_dir):
     clips = make_doc_clips_df(
         spark, spark.table("documents").filter("doc_id < 200"))
     clips.repartition(4).write.mode("overwrite").parquet(f"{root}/in")
-    job = ClipGraphJob(input_dir=f"{root}/in", output_dir=f"{root}/out",
-                       checkpoint_dir=f"{root}/ckpt",
-                       max_files_per_trigger=2)
+    job = SpecStreamJob(
+        clip_graph_spec(), input_dir=f"{root}/in",
+        input_schema=clips_spark_schema(), output_dir=f"{root}/out",
+        checkpoint_dir=f"{root}/ckpt", max_files_per_trigger=2,
+        prepare_fn=prepare_clips, prepare_preserves="*")
     job.run_to_completion(spark)
-    return (job.nodes_table.read_merged(spark)
-            .select("clip_id",
-                    F.col("sr_hz").cast("long").alias("sr_hz"),
-                    F.col("dur_ms").cast("long").alias("dur_ms"),
-                    "codec", "n_samples", "transcript_norm"))
+    return job.read_merged(spark, "Clip").select(
+        "clip_id", "sr_hz", "dur_ms", "codec", "n_samples",
+        "transcript_norm")
 
 
 def _q_spec_stream_graph(spark, sf_dir):
@@ -3181,18 +3186,13 @@ def _q_spec_stream_graph(spark, sf_dir):
     import json as _json
     import tempfile
 
-    from pyspark.sql import functions as _F
-
-    from dataflow_flex_templates_spark.functions.audio import (
-        normalize_transcript,
-        with_audio_features,
-    )
     from dataflow_flex_templates_spark.spec.parser import parse_job_spec
-    from dataflow_flex_templates_spark.streaming.spec_stream import SpecStreamJob
-    from dataflow_flex_templates_spark.testing.clips import (
+    from dataflow_flex_templates_spark.streaming.clip_graph import (
         clips_spark_schema,
-        make_doc_clips_df,
+        prepare_clips,
     )
+    from dataflow_flex_templates_spark.streaming.spec_stream import SpecStreamJob
+    from dataflow_flex_templates_spark.testing.clips import make_doc_clips_df
 
     spec = parse_job_spec(_json.dumps({
         "sources": [{"type": "bigquery", "name": "clips",
@@ -3214,12 +3214,6 @@ def _q_spec_stream_graph(spark, sf_dir):
         }],
     }))
 
-    def prepare(df):
-        return (with_audio_features(df)
-                .withColumn("transcript_norm",
-                            normalize_transcript(_F.col("transcript")))
-                .drop("bytes"))
-
     _load(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="entry_spec_stream_")
     clips = make_doc_clips_df(
@@ -3228,7 +3222,7 @@ def _q_spec_stream_graph(spark, sf_dir):
     job = SpecStreamJob(
         spec, input_dir=f"{root}/in", input_schema=clips_spark_schema(),
         output_dir=f"{root}/out", checkpoint_dir=f"{root}/ckpt",
-        max_files_per_trigger=2, prepare_fn=prepare)
+        max_files_per_trigger=2, prepare_fn=prepare_clips)
     job.run_to_completion(spark)
     return job.read_merged(spark, "Clip").select(
         "clip_id", "codec", "n_samples", "transcript_norm")
@@ -3873,11 +3867,8 @@ def _q_stream_stream_join(spark, sf_dir):
     import json as _json
     import tempfile
 
-    from dataflow_flex_templates_spark.functions.audio import (
-        normalize_transcript,
-        with_audio_features,
-    )
     from dataflow_flex_templates_spark.spec.parser import parse_job_spec
+    from dataflow_flex_templates_spark.streaming.clip_graph import prepare_clips
     from dataflow_flex_templates_spark.streaming.spec_stream import SpecStreamJob
     from dataflow_flex_templates_spark.testing.clips import make_doc_clips_df
     from pyspark.sql import types as T
@@ -3938,16 +3929,10 @@ def _q_stream_stream_join(spark, sf_dir):
         }],
     }))
 
-    def prepare(df):
-        return (with_audio_features(df)
-                .withColumn("transcript_norm",
-                            normalize_transcript(F.col("transcript")))
-                .drop("bytes"))
-
     job = SpecStreamJob(
         spec, input_dir=f"{root}/clips", input_schema=clips_schema,
         output_dir=f"{root}/out", checkpoint_dir=f"{root}/ckpt",
-        max_files_per_trigger=2, prepare_fn=prepare,
+        max_files_per_trigger=2, prepare_fn=prepare_clips,
         watermark="120 seconds",
         join_input_dir=f"{root}/scripts", join_schema=scripts_schema,
         join_window="5 minutes")

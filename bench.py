@@ -169,7 +169,7 @@ def _ensure_skew_fixture(spark, variant: str) -> str:
       row groups — the 'Iceberg partitioned by codec' upstream shape
       where ~98% of the bytes form 1-2 effective scan splits and the
       SCAN itself starves the cores. This is the documented use case
-      for salt_buckets (streaming/job.py): spread the scan before
+      for salt_buckets (SpecStreamJob): spread the scan before
       decode at the cost of shuffling the payload once.
     """
     path = _skew_fixture_dir(variant)
@@ -236,24 +236,46 @@ def run_batch_queries() -> dict[str, float]:
     return timings
 
 
-def stream_run(input_dir: str, cores: int,
-               salt_buckets: int | str = 0) -> dict:
+def _batch_secs(query) -> list[float]:
+    """Sorted trigger wall times (s) of a query's non-empty batches."""
+    return sorted(
+        p["durationMs"]["triggerExecution"] / 1000.0
+        for p in (json.loads(getattr(j, "json", None) or j)
+                  for j in query.recentProgress)
+        if p.get("durationMs", {}).get("triggerExecution") is not None
+        and p.get("numInputRows", 0) > 0
+    )
+
+
+def stream_run(input_dir: str, cores: int, salt_buckets: int = 0) -> dict:
     """Run the streaming clip→graph job to completion; one JSON dict."""
     from dataflow_flex_templates_spark.session import get_spark
-    from dataflow_flex_templates_spark.streaming.job import ClipGraphJob
+    from dataflow_flex_templates_spark.streaming.clip_graph import (
+        clip_graph_spec,
+        clips_spark_schema,
+        prepare_clips,
+    )
+    from dataflow_flex_templates_spark.streaming.spec_stream import (
+        SpecStreamJob,
+    )
 
     spark = get_spark(f"bench-stream-{cores}", cores=cores)
     n_input = spark.read.parquet(input_dir).count()
     root = tempfile.mkdtemp(prefix=f"bench_stream_c{cores}_")
-    job = ClipGraphJob(
-        input_dir=input_dir,
-        output_dir=os.path.join(root, "out"),
-        checkpoint_dir=os.path.join(root, "ckpt"),
-        max_files_per_trigger=int(os.environ.get("SPARK_GRAFT_MFPT", "32")),
-        salt_buckets=salt_buckets,
-    )
+
+    def clip_job(tag: str, **kw) -> SpecStreamJob:
+        return SpecStreamJob(
+            clip_graph_spec(), input_dir=input_dir,
+            input_schema=clips_spark_schema(),
+            output_dir=os.path.join(root, f"{tag}out"),
+            checkpoint_dir=os.path.join(root, f"{tag}ckpt"),
+            prepare_fn=prepare_clips, prepare_preserves="*", **kw)
+
+    mfpt = int(os.environ.get("SPARK_GRAFT_MFPT", "32"))
+    job = clip_job("", max_files_per_trigger=mfpt,
+                   salt_buckets=salt_buckets, salt_cols=("codec",))
     # Warm up the FULL pipeline — Python workers, Arrow, the codegen of
-    # the actual union+split write plan, parquet writer init — so the
+    # the actual per-target write plans, parquet writer init — so the
     # timed run measures sustained throughput (the metric that matters
     # at 100 TB), not one-time JVM/codegen startup. A prepare-only warm
     # run leaves batch 0 of the timed query ~1.5 s slower than steady
@@ -271,25 +293,13 @@ def stream_run(input_dir: str, cores: int,
     n_warm = warm.count()
     if n_warm > 24000:
         warm = warm.sample(24000 / n_warm, seed=7)
-    warm_job = ClipGraphJob(
-        input_dir=input_dir,
-        output_dir=os.path.join(root, "warm_out"),
-        checkpoint_dir=os.path.join(root, "warm_ckpt"),
-    )
-    warm_job._write_batch(warm, 0)
+    clip_job("warm_")._write_batch(warm, 0)
     _shutil.rmtree(os.path.join(root, "warm_out"), ignore_errors=True)
     t0 = time.monotonic()
-    q = job.start(spark, available_now=True)
-    q.awaitTermination(1800)
+    q = job.run_to_completion(spark, timeout_s=1800)
     wall = time.monotonic() - t0
-    batch_secs = sorted(
-        p["durationMs"]["triggerExecution"] / 1000.0
-        for p in (json.loads(getattr(j, "json", None) or j)
-                  for j in q.recentProgress)
-        if p.get("durationMs", {}).get("triggerExecution") is not None
-        and p.get("numInputRows", 0) > 0
-    )
-    committed = job.nodes_table.total_committed_rows()
+    batch_secs = _batch_secs(q.queries[0])
+    committed = job.tables["Clip"].total_committed_rows()
     p99 = batch_secs[min(len(batch_secs) - 1,
                          int(0.99 * len(batch_secs)))] if batch_secs else None
 
@@ -297,13 +307,9 @@ def stream_run(input_dir: str, cores: int,
     # per-codec aggregation with watermark over the same stream, update
     # mode; per-trigger latency = window-state update + emission.
     from dataflow_flex_templates_spark.streaming.windows import tumbling_agg
-    from dataflow_flex_templates_spark.testing.clips import (
-        clips_spark_schema,
-    )
 
     win_stream = (spark.readStream.schema(clips_spark_schema())
-                  .option("maxFilesPerTrigger",
-                          int(os.environ.get("SPARK_GRAFT_MFPT", "32")))
+                  .option("maxFilesPerTrigger", mfpt)
                   .parquet(input_dir))
     agg = tumbling_agg(win_stream, "event_time", "10 seconds", ["codec"],
                        {"n": "count(*)", "total_ms": "sum(dur_ms)"},
@@ -313,13 +319,7 @@ def stream_run(input_dir: str, cores: int,
           .option("checkpointLocation", os.path.join(root, "win_ckpt"))
           .trigger(availableNow=True).start())
     wq.awaitTermination(1800)
-    win_secs = sorted(
-        p["durationMs"]["triggerExecution"] / 1000.0
-        for p in (json.loads(getattr(j, "json", None) or j)
-                  for j in wq.recentProgress)
-        if p.get("durationMs", {}).get("triggerExecution") is not None
-        and p.get("numInputRows", 0) > 0
-    )
+    win_secs = _batch_secs(wq)
     win_p99 = (win_secs[min(len(win_secs) - 1, int(0.99 * len(win_secs)))]
                if win_secs else None)
     _quiesce_and_stop(spark)
@@ -339,7 +339,7 @@ def stream_run(input_dir: str, cores: int,
 
 
 def _stream_subprocess(input_dir: str, cores: int, best_of: int = 1,
-                       salt_buckets: int | str = 0) -> dict:
+                       salt_buckets: int = 0) -> dict:
     """Run the stream at `cores` in a clean JVM; with best_of > 1 take
     the highest-throughput run — a steady-state estimate that filters
     one-off JVM GC/page-cache stalls out of the scaling measurement."""
@@ -475,16 +475,6 @@ def run_skew(timings: dict) -> dict:
     hf_un = _stream_subprocess(hotfile, 8, best_of=2)
     hf_salt = _stream_subprocess(hotfile, 8, best_of=2,
                                  salt_buckets=8)
-    # salt_buckets="auto" (VERDICT r4 #4): the measured break-even
-    # wired as a decision - both fixtures here are PCM-hot (cheap
-    # codec), so auto must decline to salt on BOTH (capped: scan is
-    # healthy; hotfile: starved scan but cheap decode, where salting
-    # measured 0.675x) and thus track the better of the two manual
-    # settings within run-to-run noise.
-    sk_auto = _stream_subprocess(capped, 8, best_of=2,
-                                 salt_buckets="auto")
-    hf_auto = _stream_subprocess(hotfile, 8, best_of=2,
-                                 salt_buckets="auto")
     sk_best = max(sk_un, sk_salt, key=lambda r: r["clips_per_sec"])
     timings["stream_clips_skewed"] = sk_best["wall_sec"]
     timings["stream_clips_hotfile_salted"] = hf_salt["wall_sec"]
@@ -509,24 +499,12 @@ def run_skew(timings: dict) -> dict:
         # BASELINE.md "Skew" for when the knob does/doesn't pay
         "salt_recovery_hotfile": round(
             hf_salt["clips_per_sec"] / hf_un["clips_per_sec"], 3),
-        # auto vs the better manual setting per fixture (target
-        # ~1.0 within noise): evidence the decision rule picks the
-        # winning side of the measured break-even on its own
-        "skew_capped_auto_c8": sk_auto["clips_per_sec"],
-        "skew_hotfile_auto_c8": hf_auto["clips_per_sec"],
-        "auto_vs_best_capped": round(
-            sk_auto["clips_per_sec"] / max(
-                sk_un["clips_per_sec"], sk_salt["clips_per_sec"]), 3),
-        "auto_vs_best_hotfile": round(
-            hf_auto["clips_per_sec"] / max(
-                hf_un["clips_per_sec"], hf_salt["clips_per_sec"]), 3),
     }
 
 
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--stream":
-        salt_arg = sys.argv[4] if len(sys.argv) > 4 else "0"
-        salt = salt_arg if salt_arg == "auto" else int(salt_arg)
+        salt = int(sys.argv[4]) if len(sys.argv) > 4 else 0
         print(json.dumps(stream_run(sys.argv[2], int(sys.argv[3]),
                                     salt_buckets=salt)))
         return

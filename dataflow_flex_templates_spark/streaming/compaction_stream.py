@@ -80,8 +80,10 @@ def compaction_apply_batch(batch_df: DataFrame, tails: DataFrame,
         raise ValueError(
             f"min_file_bytes ({min_file_bytes}) must be <= "
             f"target_bytes ({target_bytes})")
-    _check_clash(batch_df, "action", "group_idx", "__base__",
-                 "__grp_n", "cum_bytes")
+    internal = ("action", "__base__", "__grp_n", "cum_bytes", "__open__",
+                "__add__")
+    _check_clash(batch_df, "group_idx", *internal)
+    _check_clash(open_bin, *internal)
     batch_df = batch_df.withColumn(size_col,
                                    checked_size(batch_df, size_col))
     sz = F.col(size_col)

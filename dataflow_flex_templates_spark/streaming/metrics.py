@@ -34,6 +34,7 @@ class ProgressRecorder(StreamingQueryListener):
 
     def __init__(self):
         self.progress: list[dict] = []
+        self._seen: set = set()
         self._lock = threading.Lock()
 
     # StreamingQueryListener interface ------------------------------------
@@ -45,15 +46,7 @@ class ProgressRecorder(StreamingQueryListener):
             p = json.loads(event.progress.json)
         except Exception:
             return
-        with self._lock:
-            # (runId, batchId) dedup: a drained run may have absorb()ed
-            # this batch from the query handle before the listener bus
-            # got around to delivering it
-            k = (p.get("runId"), p.get("batchId"))
-            if any((q.get("runId"), q.get("batchId")) == k
-                   for q in self.progress):
-                return
-            self.progress.append(p)
+        self.absorb([p])
 
     def onQueryIdle(self, event):
         pass
@@ -68,12 +61,10 @@ class ProgressRecorder(StreamingQueryListener):
         Drained runs call this so their summaries never depend on
         listener-bus delivery timing."""
         with self._lock:
-            seen = {(p.get("runId"), p.get("batchId"))
-                    for p in self.progress}
             for p in events:
                 k = (p.get("runId"), p.get("batchId"))
-                if k not in seen:
-                    seen.add(k)
+                if k not in self._seen:
+                    self._seen.add(k)
                     self.progress.append(p)
 
     # analysis -------------------------------------------------------------

@@ -136,10 +136,7 @@ class ExactlyOnceTable:
             "epoch_id": str(uuid.uuid4()),
         }
         record.update(extra_metrics or {})
-        tmp = self._commit_file(batch_id) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        os.rename(tmp, self._commit_file(batch_id))  # atomic publish
+        _publish_json(self._commit_file(batch_id), record)
         return record
 
     # -- compaction (Iceberg rewrite_data_files analogue) ----------------
@@ -202,10 +199,7 @@ class ExactlyOnceTable:
             "partitions": _footer_part_counts(base_dir),
             "compacted_at_unix": time.time(),
         }
-        tmp = self._base_file() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.rename(tmp, self._base_file())  # atomic publish
+        _publish_json(self._base_file(), manifest)
         import shutil
         for b in batches:  # covered data now lives in the base
             shutil.rmtree(os.path.join(self._data_dir, f"batch={b}"),
@@ -251,10 +245,7 @@ class ExactlyOnceTable:
             "expired_rows": rows + (prev["expired_rows"] if prev else 0),
             "expired_at_unix": time.time(),
         }
-        tmp = self._watermark_file() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        os.rename(tmp, self._watermark_file())  # atomic publish
+        _publish_json(self._watermark_file(), record)
         for b in expirable:                     # now redundant
             try:
                 os.remove(self._commit_file(b))
@@ -301,12 +292,11 @@ class ExactlyOnceTable:
         # without it Spark infers the schema from ONE batch's footer and
         # silently drops columns the other batches carry
         df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        # multi-table commits null-pad to the union schema; project back
-        # to the union of every commit's recorded column list (first-
-        # appearance order) so a table written by both write_batch and
-        # write_batch_multi reads the same regardless of which wrote
-        # last. Commits from before column recording fall back to the
-        # physical schema.
+        # project back to the union of every commit's recorded column
+        # list (first-appearance order), so the read schema is what the
+        # commits recorded, in commit order, whatever order mergeSchema
+        # produced. Commits from before column recording fall back to
+        # the physical schema.
         cols: list[str] = []
         any_recorded = False
         base = self.base_info()
@@ -439,6 +429,15 @@ class ExactlyOnceTable:
                 .select(*out_schema))
 
 
+def _publish_json(path: str, record: dict) -> None:
+    """Write ``record`` to a unique tmp file, then atomically rename it
+    onto ``path``: readers see the old file or the whole new one."""
+    tmp = path + f".tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(record, f)
+    os.rename(tmp, path)
+
+
 def _footer_part_counts(batch_dir: str) -> dict[str, int]:
     from concurrent.futures import ThreadPoolExecutor
 
@@ -459,83 +458,3 @@ def _footer_part_counts(batch_dir: str) -> dict[str, int]:
         pid = fn.split("-")[1] if fn.startswith("part-") else fn
         part_counts[pid] = part_counts.get(pid, 0) + int(n)
     return part_counts
-
-
-def write_batch_multi(
-    tables: dict[str, ExactlyOnceTable],
-    frames: dict[str, DataFrame],
-    batch_id: int,
-    commit_order: list[str] | None = None,
-) -> None:
-    """Commit several relations of one micro-batch in ONE Spark job.
-
-    The naive path runs one write job per table; at one micro-batch per
-    trigger that is 3+ driver-scheduled jobs each paying ~0.3-0.5 s of
-    planning/scheduling/barrier latency — the measured per-batch floor
-    (~1.1 s) that caps pipeline throughput regardless of cores. Here
-    all frames are unioned under a ``__table__`` discriminator and
-    written once with ``partitionBy``; the partition directories are
-    then renamed into each table's data dir and commit markers are
-    published in ``commit_order`` (nodes before edges — D2 — so edge
-    rows never become visible before their endpoint nodes).
-
-    Frames may have different schemas; the union null-pads (RLE nulls
-    cost ~nothing in parquet) and each commit records the table's own
-    column list, which ``read_appends`` projects back out.
-    """
-    if all(tables[k].is_committed(batch_id) for k in frames):
-        # replayed batch: consume every frame so stateful operators
-        # commit their stores (see write_batch's replay note)
-        for df in frames.values():
-            df.write.format("noop").mode("overwrite").save()
-        return
-    names = list(frames)
-    order = commit_order or names
-    first = tables[names[0]]
-    staging = os.path.join(os.path.dirname(first.path.rstrip("/")),
-                           f"_staging_{batch_id}_{uuid.uuid4().hex[:8]}")
-    out = None
-    col_lists: dict[str, list[str]] = {}
-    for name in names:
-        df, tbl = frames[name], tables[name]
-        if tbl.order_col not in df.columns:
-            df = df.withColumn(
-                tbl.order_col,
-                F.lit(batch_id).cast("long") * F.lit(1 << 31)
-                + F.monotonically_increasing_id() % (1 << 31))
-        col_lists[name] = df.columns
-        tagged = df.withColumn("__table__", F.lit(name))
-        out = tagged if out is None else out.unionByName(
-            tagged, allowMissingColumns=True)
-    out.write.mode("overwrite").partitionBy("__table__").parquet(staging)
-
-    try:
-        for name in order:
-            tbl = tables[name]
-            if tbl.is_committed(batch_id):
-                continue
-            src = os.path.join(staging, f"__table__={name}")
-            dst = os.path.join(tbl._data_dir, f"batch={batch_id}")
-            if os.path.isdir(dst):
-                import shutil
-                shutil.rmtree(dst)
-            if os.path.isdir(src):
-                os.rename(src, dst)
-            else:
-                os.makedirs(dst, exist_ok=True)  # empty relation
-            parts = _footer_part_counts(dst)
-            record = {
-                "batch_id": batch_id,
-                "rows": int(sum(parts.values())),
-                "partitions": parts,
-                "columns": col_lists[name],
-                "committed_at_unix": time.time(),
-                "epoch_id": str(uuid.uuid4()),
-            }
-            tmp = tbl._commit_file(batch_id) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(record, f)
-            os.rename(tmp, tbl._commit_file(batch_id))
-    finally:
-        import shutil
-        shutil.rmtree(staging, ignore_errors=True)

@@ -20,9 +20,14 @@ so replays, restarts, and different parallelism levels commit
 row-identical merged tables (the north_rule exactly-once contract).
 ``event_time_ordinal`` exposes the same expression for batch oracles.
 
-Skew: hot codec/sr_hz keys are spread by salted repartition before the
-(expensive) prepare stage, same strategy as ClipGraphJob (SURVEY
+Skew: per-row decode needs no co-location, so by default the batch is
+not shuffled at all. ``salt_buckets``/``salt_cols`` spread a skewed
+FILE layout (e.g. one giant file per hot codec) across tasks with a
+salted repartition before the (expensive) prepare stage (SURVEY
 §2.10); AQE handles residual imbalance.
+
+The clip→graph flagship is ``streaming.clip_graph``'s spec, schema and
+prepare stage run on this engine.
 """
 
 from __future__ import annotations
@@ -128,8 +133,17 @@ class MultiQuery:
     """Handle over the job's streaming queries (row path + one per
     windowed target)."""
 
-    def __init__(self, queries: list):
+    def __init__(self, queries: list,
+                 on_done: Callable[[], None] | None = None):
         self.queries = queries
+        #: called once, when the run is over: stop(), an awaitTermination
+        #: that saw every query end, or one that a failed query raised from
+        self._on_done = on_done
+
+    def _done(self) -> None:
+        if self._on_done is not None:
+            on_done, self._on_done = self._on_done, None
+            on_done()
 
     @property
     def isActive(self) -> bool:  # noqa: N802 — mirrors StreamingQuery
@@ -144,18 +158,25 @@ class MultiQuery:
 
         deadline = None if timeout_s is None else time.monotonic() + timeout_s
         done = True
-        for q in self.queries:
-            remaining = (None if deadline is None
-                         else max(0.1, deadline - time.monotonic()))
-            finished = q.awaitTermination(remaining)
-            if remaining is not None and not finished:
-                done = False
+        try:
+            for q in self.queries:
+                remaining = (None if deadline is None
+                             else max(0.1, deadline - time.monotonic()))
+                finished = q.awaitTermination(remaining)
+                if remaining is not None and not finished:
+                    done = False
+        except Exception:  # a failed query (StreamingQueryException)
+            self._done()
+            raise
+        if done:
+            self._done()
         return done if timeout_s is not None else None
 
     def stop(self) -> None:
         for q in self.queries:
             if q.isActive:
                 q.stop()
+        self._done()
 
 
 class SpecStreamJob:
@@ -574,7 +595,38 @@ class SpecStreamJob:
                 writer = writer.trigger(availableNow=True)
             queries.append(writer.start())
         self._run_ids = {str(q.runId) for q in queries}
-        return MultiQuery(queries)
+        rec = self._recorder  # this run's: a restart replaces the field
+        return MultiQuery(queries, on_done=lambda: self._detach_recorder(
+            spark, queries, rec))
+
+    def _detach_recorder(self, spark: SparkSession, queries: list,
+                         recorder: ProgressRecorder) -> None:
+        """Once the job's queries are over: take their progress from the
+        query handles and drop the session-global listener. A listener
+        left attached is called for every progress event of every later
+        query in the session."""
+        import json as _json
+
+        # Listener events are delivered asynchronously and can lag
+        # arbitrarily under load (a 15 s settle wait was observed to
+        # miss a whole run's events). The query handles' recentProgress
+        # is populated synchronously by the micro-batch thread, so
+        # harvest it directly — a drained run's summary does not depend
+        # on listener-bus timing at all; the listener serves continuous
+        # (non-drained) monitoring.
+        harvested = []
+        for q_ in queries:
+            for j in q_.recentProgress:
+                try:
+                    harvested.append(
+                        _json.loads(getattr(j, "json", None) or j))
+                except Exception:
+                    pass
+        recorder.absorb(harvested)
+        try:
+            spark.streams.removeListener(recorder)
+        except Exception:
+            pass
 
     def run_to_completion(self, spark: SparkSession, timeout_s: int = 600):
         from dataflow_flex_templates_spark.graph.actions import (
@@ -589,35 +641,13 @@ class SpecStreamJob:
         # Hard-fail on timeout: an unfinished availableNow run means the
         # merged tables are partial, and every downstream read (oracle
         # rows, named-barrier actions, metrics) would silently operate
-        # on short data. Same contract as _await_or_raise / ClipGraphJob.
+        # on short data. Same contract as __spark_entry__._await_or_raise.
         if not q.awaitTermination(timeout_s):
             q.stop()
             raise RuntimeError(
                 f"SpecStreamJob: availableNow run timed out ({timeout_s} s)"
                 " — refusing to treat partial target tables as complete")
-        q.stop()
-        # Listener events are delivered asynchronously and can lag
-        # arbitrarily under load (a 15 s settle wait was observed to
-        # miss a whole run's events). The query handles' recentProgress
-        # is populated synchronously by the micro-batch thread, so
-        # harvest it directly — the summary no longer depends on
-        # listener-bus timing at all; the listener stays attached for
-        # continuous (non-drained) monitoring use.
-        import json as _json
-
-        harvested = []
-        for q_ in q.queries:
-            for j in q_.recentProgress:
-                try:
-                    harvested.append(
-                        _json.loads(getattr(j, "json", None) or j))
-                except Exception:
-                    pass
-        self._recorder.absorb(harvested)
-        try:
-            spark.streams.removeListener(self._recorder)
-        except Exception:
-            pass
+        q.stop()  # harvests the queries' progress, drops the listener
         # Silent data loss is the #1 streaming footgun: if the watermark
         # dropped a meaningful share of input rows (out-of-order input
         # beyond the configured delay), say so loudly instead of

@@ -27,6 +27,9 @@ import numpy as np
 import pandas as pd
 
 from dataflow_flex_templates_spark.functions.audio import encode_pcm_np
+from dataflow_flex_templates_spark.streaming.clip_graph import (  # noqa: F401
+    clips_spark_schema,
+)
 
 SR_CHOICES = [16000, 8000, 22050, 44100]
 SR_WEIGHTS = [0.70, 0.14, 0.10, 0.06]
@@ -127,20 +130,6 @@ def make_clips_pdf(
         columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
                  "transcript", "event_time"],
     )
-
-
-def clips_spark_schema():
-    from pyspark.sql import types as T
-
-    return T.StructType([
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("sr_hz", T.IntegerType()),
-        T.StructField("dur_ms", T.IntegerType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("transcript", T.StringType()),
-        T.StructField("event_time", T.TimestampType()),
-    ])
 
 
 def make_clips_df(spark, n: int, seed: int = 42, **kw):

@@ -22,14 +22,21 @@ Run the SAME command with --num-executors N and 4N on identical input
 to evidence the throughput-scaling criterion; in the sandbox,
 ``python bench.py`` does the equivalent at local[2] vs local[8].
 
-With --spec, the JSON job spec drives the pipeline (SpecStreamJob —
-the reference's job-spec language, streaming); without it, the
-hardwired ClipGraphJob flagship runs.
+The pipeline is always SpecStreamJob (the reference's job-spec
+language, streaming) with the clip decode as its shared prepare stage.
+With --spec, that JSON job spec drives it; without it, the flagship
+spec runs (streaming/clip_graph.py: a Clip node per clip_id and an
+ENCODED_AS edge to its Codec). The default is an availableNow drain:
+it exits non-zero if the drain does not finish within --timeout-s, and
+after the drain it runs the spec's nodes/edges-phase and
+execute_after_name actions. --continuous runs until killed or until
+--timeout-s has passed.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -38,7 +45,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--input", required=True, help="clip table path/dir")
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--spec", help="job-spec JSON path (SpecStreamJob)")
+    ap.add_argument("--spec", help="job-spec JSON path (default: the "
+                    "clip→graph flagship spec)")
     ap.add_argument("--watermark", default="60 seconds")
     ap.add_argument("--max-files-per-trigger", type=int, default=32)
     ap.add_argument("--audit-dir", default=None)
@@ -51,7 +59,9 @@ def main(argv: list[str] | None = None) -> int:
                          "base every N batches (0 = never)")
     ap.add_argument("--continuous", action="store_true",
                     help="run until killed (default: availableNow drain)")
-    ap.add_argument("--timeout-s", type=int, default=24 * 3600)
+    ap.add_argument("--timeout-s", type=int, default=24 * 3600,
+                    help="drain deadline (exceeding it is an error); "
+                         "with --continuous, how long to run")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -60,83 +70,46 @@ def main(argv: list[str] | None = None) -> int:
     # getOrCreate() attaches to it (local runs fall back to defaults).
     spark = SparkSession.builder.appName("clip-graph").getOrCreate()
 
-    from dataflow_flex_templates_spark.streaming.metrics import (
-        ProgressRecorder,
-    )
-    from dataflow_flex_templates_spark.testing.clips import (
+    from dataflow_flex_templates_spark.streaming.clip_graph import (
+        clip_graph_spec,
         clips_spark_schema,
+        prepare_clips,
     )
-
-    rec = ProgressRecorder()
-    spark.streams.addListener(rec)
+    from dataflow_flex_templates_spark.streaming.spec_stream import (
+        SpecStreamJob,
+    )
 
     if args.spec:
-        from pyspark.sql import functions as F
-
-        from dataflow_flex_templates_spark.functions.audio import (
-            normalize_transcript,
-            with_audio_features,
-        )
         from dataflow_flex_templates_spark.spec.parser import parse_job_spec
-        from dataflow_flex_templates_spark.streaming.spec_stream import (
-            SpecStreamJob,
-        )
 
         with open(args.spec) as f:
             spec = parse_job_spec(f.read())
-
-        def prepare(df):
-            return (with_audio_features(df)
-                    .withColumn("transcript_norm",
-                                normalize_transcript(F.col("transcript")))
-                    .drop("bytes"))
-
-        job = SpecStreamJob(
-            spec,
-            input_dir=args.input,
-            input_schema=clips_spark_schema(),
-            output_dir=args.output,
-            checkpoint_dir=args.checkpoint,
-            watermark=args.watermark,
-            max_files_per_trigger=args.max_files_per_trigger,
-            prepare_fn=prepare,
-            prepare_preserves="*",
-            audit_dir=args.audit_dir,
-            state_dedup_key=args.state_dedup_key,
-            compact_every=args.compact_every,
-            ignore_corrupt_files=args.ignore_corrupt_files,
-        )
-        q = job.start(spark, available_now=not args.continuous)
     else:
-        from dataflow_flex_templates_spark.streaming.job import ClipGraphJob
+        spec = clip_graph_spec()
 
-        job = ClipGraphJob(
-            input_dir=args.input,
-            output_dir=args.output,
-            checkpoint_dir=args.checkpoint,
-            watermark=args.watermark,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
-        q = job.start(spark, available_now=not args.continuous)
-
-    q.awaitTermination(args.timeout_s)
-    if q.isActive:
+    job = SpecStreamJob(
+        spec,
+        input_dir=args.input,
+        input_schema=clips_spark_schema(),
+        output_dir=args.output,
+        checkpoint_dir=args.checkpoint,
+        watermark=args.watermark,
+        max_files_per_trigger=args.max_files_per_trigger,
+        prepare_fn=prepare_clips,
+        prepare_preserves="*",
+        audit_dir=args.audit_dir,
+        state_dedup_key=args.state_dedup_key,
+        compact_every=args.compact_every,
+        ignore_corrupt_files=args.ignore_corrupt_files,
+    )
+    if args.continuous:
+        q = job.start(spark, available_now=False)
+        q.awaitTermination(args.timeout_s)
         q.stop()
-    import json
-
-    # Listener events are dispatched asynchronously; fold in each
-    # query's recentProgress so a fast availableNow drain still reports.
-    queries = getattr(q, "queries", [q])
-    seen = {(p.get("runId"), p.get("batchId")) for p in rec.progress}
-    for sq in queries:
-        for p in sq.recentProgress:
-            try:
-                d = json.loads(getattr(p, "json", None) or p)
-            except Exception:
-                continue
-            if (d.get("runId"), d.get("batchId")) not in seen:
-                rec.progress.append(d)
-    print(json.dumps(rec.summary()))
+    else:
+        # raises on timeout rather than exiting 0 over partial tables
+        job.run_to_completion(spark, timeout_s=args.timeout_s)
+    print(json.dumps(job.metrics_summary()))
     return 0
 
 

@@ -5,6 +5,10 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # keep test JVM small
+# session.py's 16g default heap is sized for 32-slot scans; the suite's
+# inputs are small, and a 16g heap on a 16 GB host grows until the
+# kernel kills the JVM part-way through the run.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 

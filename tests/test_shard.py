@@ -320,6 +320,16 @@ def test_compaction_stream_guards(spark):
     with _pytest.raises(ValueError, match="clash"):
         compaction_apply_batch(df.withColumn("action", df.source),
                                tails, ob, 100, 50)
+    # a carried column named like the fold's internal __open__ would be
+    # overwritten by it (batch side and store side alike)
+    with _pytest.raises(ValueError, match="clash"):
+        compaction_apply_batch(df.withColumn("__open__", df.file_id),
+                               tails, ob.withColumn("__open__", ob.file_id),
+                               100, 50)
+    with _pytest.raises(ValueError, match="clash"):
+        compaction_apply_batch(df, tails,
+                               ob.withColumn("__open__", ob.file_id),
+                               100, 50)
 
 
 def test_compaction_null_size_raises(spark):

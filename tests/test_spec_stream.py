@@ -14,27 +14,13 @@ import tempfile
 
 import pytest
 
+from dataflow_flex_templates_spark.streaming.clip_graph import prepare_clips
 from dataflow_flex_templates_spark.testing.clips import (
     clips_spark_schema,
     make_clips_pdf,
 )
 
 N_CLIPS = 300
-
-
-def _prepare(df):
-    """Shared decode/normalize prefix (vectorized pandas UDFs)."""
-    from pyspark.sql import functions as F
-
-    from dataflow_flex_templates_spark.functions.audio import (
-        normalize_transcript,
-        with_audio_features,
-    )
-
-    return (with_audio_features(df)
-            .withColumn("transcript_norm",
-                        normalize_transcript(F.col("transcript")))
-            .drop("bytes"))
 
 
 def _spec():
@@ -128,7 +114,7 @@ def stream_env(spark):
         max_files_per_trigger=2,
         salt_buckets=8,
         salt_cols=("codec",),
-        prepare_fn=_prepare, prepare_preserves="*",
+        prepare_fn=prepare_clips, prepare_preserves="*",
         audit_dir=os.path.join(root, "audit"),
     )
     job.run_to_completion(spark, timeout_s=900)
@@ -145,7 +131,7 @@ def _batch_oracle(spark, inp):
     )
 
     raw = spark.read.schema(clips_spark_schema()).parquet(inp)
-    prepared = _prepare(event_time_ordinal(raw, "event_time"))
+    prepared = prepare_clips(event_time_ordinal(raw, "event_time"))
     spec = _parse(_spec())
     # windowed target runs in the streaming path only
     spec.targets = [t for t in spec.targets if t.transform.window is None]
@@ -176,7 +162,7 @@ def test_ignore_corrupt_files_knob(spark, stream_env):
             checkpoint_dir=os.path.join(root, f"ckpt_corrupt_{tag}"),
             watermark="60 seconds",
             max_files_per_trigger=2,
-            prepare_fn=_prepare, prepare_preserves="*",
+            prepare_fn=prepare_clips, prepare_preserves="*",
             ignore_corrupt_files=ignore,
         )
 
@@ -215,7 +201,7 @@ def test_parallelism_invariance(spark, stream_env):
                 watermark="60 seconds",
                 max_files_per_trigger=mfpt,
                 salt_buckets=salt,
-                prepare_fn=_prepare, prepare_preserves="*",
+                prepare_fn=prepare_clips, prepare_preserves="*",
             )
             j.run_to_completion(spark, timeout_s=900)
             return (j.read_merged(spark, "Clip").toPandas()
@@ -249,7 +235,7 @@ def test_auto_compaction_preserves_merge(spark, stream_env):
         checkpoint_dir=os.path.join(root, "ckpt_autocompact"),
         watermark="60 seconds",
         max_files_per_trigger=1,
-        prepare_fn=_prepare, prepare_preserves="*",
+        prepare_fn=prepare_clips, prepare_preserves="*",
         compact_every=2,
     )
     j.run_to_completion(spark, timeout_s=900)
@@ -282,6 +268,11 @@ def test_row_targets_match_batch(spark, stream_env):
             "transcript_norm"]
     assert got_nodes[cols].equals(want_nodes[cols])
     assert len(got_nodes) == pdf["clip_id"].nunique()
+    # LWW: every duplicated clip_id is won by its later rev2 transcript
+    dup_ids = pdf[pdf.duplicated("clip_id", keep=False)]["clip_id"].unique()
+    assert len(dup_ids) > 0
+    winners = got_nodes[got_nodes["clip_id"].isin(dup_ids)]
+    assert winners["transcript_norm"].str.endswith("rev2").all()
 
     got_edges = (job.read_merged(spark, "ENCODED_AS").toPandas()
                  .sort_values(["clip_id", "codec"]).reset_index(drop=True))
@@ -357,9 +348,13 @@ def test_kill_and_resume(spark, stream_env):
             checkpoint_dir=os.path.join(root, "ckpt_resume"),
             watermark="60 seconds",
             max_files_per_trigger=1,
-            prepare_fn=_prepare, prepare_preserves="*",
+            prepare_fn=prepare_clips, prepare_preserves="*",
         )
 
+    def n_listeners():
+        return len(spark._jsparkSession.streams().listListeners())
+
+    n0 = n_listeners()
     j1 = mk()
     q = j1.start(spark, available_now=True)
     deadline = time.time() + 300
@@ -371,6 +366,8 @@ def test_kill_and_resume(spark, stream_env):
     # IS the kill, not a failure. Poll until every query is fully down
     # before resuming on the same checkpoint.
     q.stop()
+    # the stopped run's progress listener is session-global: it must go
+    assert n_listeners() == n0
     try:
         q.awaitTermination(60)
     except Exception:
@@ -410,7 +407,7 @@ def test_reset_w8(spark, stream_env):
         output_dir=os.path.join(root, "out_reset"),
         checkpoint_dir=os.path.join(root, "ckpt_reset"),
         max_files_per_trigger=3,
-        prepare_fn=_prepare, prepare_preserves="*",
+        prepare_fn=prepare_clips, prepare_preserves="*",
     )
     j.run_to_completion(spark, timeout_s=900)
     assert j.tables["Clip"].committed_batches()
@@ -452,7 +449,7 @@ def test_state_dedup_same_final_table(spark, stream_env):
         checkpoint_dir=os.path.join(root, "ckpt_sd"),
         watermark="60 seconds",
         max_files_per_trigger=2,
-        prepare_fn=_prepare, prepare_preserves="*",
+        prepare_fn=prepare_clips, prepare_preserves="*",
         state_dedup_key="clip_id",
     )
     j.run_to_completion(spark, timeout_s=900)
@@ -490,7 +487,7 @@ def test_actions_phases_in_stream(spark, stream_env):
         output_dir=os.path.join(root, "out_act"),
         checkpoint_dir=os.path.join(root, "ckpt_act"),
         max_files_per_trigger=3,
-        prepare_fn=_prepare, prepare_preserves="*",
+        prepare_fn=prepare_clips, prepare_preserves="*",
     )
     j.run_to_completion(spark, timeout_s=900)
     assert [r["name"] for r in j.action_results] == ["pre", "post"]
@@ -597,7 +594,7 @@ def test_continuous_mode_incremental_files(spark, stream_env):
         output_dir=os.path.join(root, "out_cont"),
         checkpoint_dir=os.path.join(root, "ckpt_cont"),
         max_files_per_trigger=4,
-        prepare_fn=_prepare, prepare_preserves="*",
+        prepare_fn=prepare_clips, prepare_preserves="*",
     )
     q = j.start(spark, available_now=False)
     try:
@@ -667,7 +664,7 @@ def test_joined_two_stream_pipeline(spark, stream_env):
         checkpoint_dir=os.path.join(root, "ckpt_join"),
         watermark="60 seconds",
         max_files_per_trigger=2,
-        prepare_fn=_prepare, prepare_preserves="*",
+        prepare_fn=prepare_clips, prepare_preserves="*",
         join_input_dir=script_dir,
         join_schema=script_schema,
         join_window="5 minutes",
@@ -694,7 +691,7 @@ def test_joined_two_stream_pipeline(spark, stream_env):
         F.col("c.codec").alias("codec"),
         F.col("t.transcript").alias("transcript"),
         F.col("c.event_time").alias("event_time"))
-    prepared = _prepare(event_time_ordinal(joined_b, "event_time"))
+    prepared = prepare_clips(event_time_ordinal(joined_b, "event_time"))
     bspec = _parse(spec)
     batch = run_job(spark, bspec, source_frames={"clips": prepared})
 
@@ -729,7 +726,7 @@ def test_w5_parallelism_knob_applied(spark, stream_env):
         output_dir=os.path.join(root, "out_w5"),
         checkpoint_dir=os.path.join(root, "ckpt_w5"),
         max_files_per_trigger=6,
-        prepare_fn=_prepare, prepare_preserves="*",
+        prepare_fn=prepare_clips, prepare_preserves="*",
     )
     j.run_to_completion(spark, timeout_s=900)
     for b in j.tables["Clip"].committed_batches():
@@ -768,7 +765,7 @@ def test_execute_after_name_streaming(spark, stream_env):
         output_dir=os.path.join(root, "out_named"),
         checkpoint_dir=os.path.join(root, "ckpt_named"),
         max_files_per_trigger=3,
-        prepare_fn=_prepare, prepare_preserves="*",
+        prepare_fn=prepare_clips, prepare_preserves="*",
     )
     j.run_to_completion(spark, timeout_s=900)
     names = [r["name"] for r in j.action_results]
@@ -791,7 +788,7 @@ def test_windowed_target_skips_prepare_when_raw_suffices(spark, stream_env):
 
     def counting_prepare(df):
         calls.append(1)
-        return _prepare(df)
+        return prepare_clips(df)
 
     # CodecWindow aggregates codec/dur_ms — raw columns. With the
     # caller's prepare_preserves="*" guarantee and no row-level target
@@ -822,7 +819,7 @@ def test_windowed_target_skips_prepare_when_raw_suffices(spark, stream_env):
 
     def counting_prepare2(df):
         calls2.append(1)
-        return _prepare(df)
+        return prepare_clips(df)
 
     spec2 = _spec()
     spec2["targets"] = [t for t in spec2["targets"]
@@ -853,7 +850,7 @@ def test_windowed_target_skips_prepare_when_raw_suffices(spark, stream_env):
 
     def counting_prepare3(df):
         calls3.append(1)
-        return _prepare(df)
+        return prepare_clips(df)
 
     spec3 = _spec()
     spec3["targets"] = [t for t in spec3["targets"]
@@ -1142,7 +1139,7 @@ def test_schema_evolution_across_restart(spark, stream_env):
             output_dir=os.path.join(root, "out_evolve"),
             checkpoint_dir=os.path.join(root, "ckpt_evolve"),
             max_files_per_trigger=1,
-            prepare_fn=_prepare, prepare_preserves="*",
+            prepare_fn=prepare_clips, prepare_preserves="*",
         )
 
     import time
@@ -1334,7 +1331,7 @@ def chaos_env(spark, stream_env):
             checkpoint_dir=os.path.join(root, f"ckpt_chaos_{tag}"),
             watermark="60 seconds",
             max_files_per_trigger=1,
-            prepare_fn=_prepare, prepare_preserves="*",
+            prepare_fn=prepare_clips, prepare_preserves="*",
             join_input_dir=script_dir,
             join_schema=script_schema,
             join_window="5 minutes",

@@ -1,6 +1,7 @@
-"""Streaming semantics tests (SURVEY.md §5 item 4):
-- exactly-once committed rows, identical across replays
-- kill-and-resume from checkpoint
+"""Streaming semantics tests (SURVEY.md §5 item 4; exactly-once,
+replay and kill-and-resume of the clip→graph job are in
+test_spec_stream.py):
+- exactly-once sink commit protocol
 - tumbling/sliding/session windows with watermark late-data drop
 - stateful stream-stream clip↔transcript join
 - applyInPandasWithState LWW dedup
@@ -33,105 +34,6 @@ def clip_dirs(spark):
     df.repartition(6).write.parquet(inp)
     yield root, inp, pdf
     shutil.rmtree(root, ignore_errors=True)
-
-
-def _run_job(spark, root, inp, tag, **kw):
-    from dataflow_flex_templates_spark.streaming.job import ClipGraphJob
-
-    job = ClipGraphJob(
-        input_dir=inp,
-        output_dir=os.path.join(root, f"out_{tag}"),
-        checkpoint_dir=os.path.join(root, f"ckpt_{tag}"),
-        max_files_per_trigger=2,
-        salt_buckets=8,
-        **kw,
-    )
-    job.run_to_completion(spark, timeout_s=600)
-    return job
-
-
-def test_streaming_graph_exactly_once(spark, clip_dirs):
-    root, inp, pdf = clip_dirs
-    job = _run_job(spark, root, inp, "a")
-
-    nodes = job.nodes_table.read_merged(spark).toPandas()
-    # one node per distinct clip_id (MERGE LWW)
-    assert len(nodes) == pdf["clip_id"].nunique()
-    # LWW: for duplicated keys the later event_time's transcript (rev2) won
-    dup_ids = pdf[pdf.duplicated("clip_id", keep=False)]["clip_id"].unique()
-    assert len(dup_ids) > 0
-    winners = nodes[nodes["clip_id"].isin(dup_ids)]
-    assert winners["transcript_norm"].str.endswith("rev2").all()
-
-    edges = job.edges_table.read_merged(spark).toPandas()
-    assert len(edges) == pdf.groupby(["clip_id", "codec"]).ngroups
-
-    # audit trail: committed appends == input rows (no loss, no dupes)
-    assert job.nodes_table.total_committed_rows() == len(pdf)
-    # lineage present per commit
-    info = job.nodes_table.commit_info(job.nodes_table.committed_batches()[0])
-    assert info["rows"] > 0 and info["partitions"]
-
-
-def test_streaming_replay_identical(spark, clip_dirs):
-    """Same input replayed (fresh checkpoint) → identical committed rows."""
-    root, inp, pdf = clip_dirs
-    job_b = _run_job(spark, root, inp, "b")
-    job_a_nodes = (_reload(spark, root, "a").nodes_table
-                   .read_merged(spark).toPandas()
-                   .sort_values("clip_id").reset_index(drop=True))
-    job_b_nodes = (job_b.nodes_table.read_merged(spark).toPandas()
-                   .sort_values("clip_id").reset_index(drop=True))
-    cols = ["clip_id", "sr_hz", "dur_ms", "codec", "n_samples",
-            "transcript_norm"]
-    assert job_a_nodes[cols].equals(job_b_nodes[cols])
-
-
-def _reload(spark, root, tag):
-    from dataflow_flex_templates_spark.streaming.job import ClipGraphJob
-
-    return ClipGraphJob(
-        input_dir=os.path.join(root, "input"),
-        output_dir=os.path.join(root, f"out_{tag}"),
-        checkpoint_dir=os.path.join(root, f"ckpt_{tag}"),
-    )
-
-
-def test_kill_and_resume_from_checkpoint(spark, clip_dirs):
-    """Stop after the first micro-batch; restarting from the checkpoint
-    must process the rest exactly once (no duplicate commits)."""
-    from dataflow_flex_templates_spark.streaming.job import ClipGraphJob
-
-    root, inp, pdf = clip_dirs
-    job = ClipGraphJob(
-        input_dir=inp,
-        output_dir=os.path.join(root, "out_resume"),
-        checkpoint_dir=os.path.join(root, "ckpt_resume"),
-        max_files_per_trigger=1,
-        salt_buckets=4,
-    )
-    q = job.start(spark, available_now=True)
-    # wait for ≥1 committed batch then kill mid-stream
-    import time
-    deadline = time.time() + 300
-    while not job.nodes_table.committed_batches() and time.time() < deadline:
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(60)
-    done_before = set(job.nodes_table.committed_batches())
-    assert done_before, "no batch committed before kill"
-
-    job2 = ClipGraphJob(
-        input_dir=inp,
-        output_dir=os.path.join(root, "out_resume"),
-        checkpoint_dir=os.path.join(root, "ckpt_resume"),
-        max_files_per_trigger=1,
-        salt_buckets=4,
-    )
-    job2.run_to_completion(spark, timeout_s=600)
-    nodes = job2.nodes_table.read_merged(spark).toPandas()
-    assert len(nodes) == pdf["clip_id"].nunique()
-    assert job2.nodes_table.total_committed_rows() == len(pdf)
 
 
 def test_tumbling_window_with_watermark(spark, tmp_path):
@@ -454,88 +356,36 @@ def test_exactly_once_crash_between_data_and_commit(spark, tmp_path):
 def test_salted_repartition_spreads_skewed_file_layout(spark, tmp_path):
     """Skew knob (north_rule): a single-file input (the degenerate
     hot-partition layout) decodes in ~1 task without salting; with
-    salt_buckets=8 the rows spread across ≥6 tasks."""
+    salt_buckets=8 on codec the rows spread across ≥6 tasks."""
     import pyspark.sql.functions as F
 
-    from dataflow_flex_templates_spark.streaming.job import ClipGraphJob
+    from dataflow_flex_templates_spark.streaming.clip_graph import (
+        clip_graph_spec,
+        prepare_clips,
+    )
+    from dataflow_flex_templates_spark.streaming.spec_stream import (
+        SpecStreamJob,
+    )
     from dataflow_flex_templates_spark.testing.clips import make_clips_df
 
     inp = str(tmp_path / "one_file")
     make_clips_df(spark, 400, seed=8).coalesce(1).write.parquet(inp)
     df = spark.read.parquet(inp)
 
-    def n_parts(job):
+    def n_parts(tag, **salt):
+        job = SpecStreamJob(
+            clip_graph_spec(), input_dir=inp,
+            input_schema=clips_spark_schema(),
+            output_dir=str(tmp_path / f"o_{tag}"),
+            checkpoint_dir=str(tmp_path / f"c_{tag}"),
+            prepare_fn=prepare_clips, prepare_preserves="*", **salt)
         return (job.prepare_batch(df)
                 .select(F.spark_partition_id().alias("p"))
                 .groupBy("p").count().count())
 
-    base = ClipGraphJob(input_dir=inp, output_dir=str(tmp_path / "o1"),
-                        checkpoint_dir=str(tmp_path / "c1"))
-    salted = ClipGraphJob(input_dir=inp, output_dir=str(tmp_path / "o2"),
-                          checkpoint_dir=str(tmp_path / "c2"),
-                          salt_buckets=8)
-    assert n_parts(base) <= 2          # one small file → ~one split
-    assert n_parts(salted) >= 6        # salt spreads the hot layout
-
-
-def test_salt_buckets_auto_decision(spark, tmp_path):
-    """salt_buckets='auto' wires the MEASURED break-even (BASELINE.md
-    "Skew"): salt only when the scan is layout-starved (files < cores)
-    AND the codec mix is expensive-per-byte (ADPCM). Four quadrants:
-    only starved+expensive salts; the decision is cached after batch 0;
-    a bogus string raises."""
-    import pyspark.sql.functions as F
-
-    from dataflow_flex_templates_spark.streaming.job import ClipGraphJob
-    from dataflow_flex_templates_spark.testing.clips import make_clips_df
-
-    cheap = make_clips_df(spark, 400, seed=8)  # stock mix: pcm-dominant
-    expensive = make_clips_df(
-        spark, 400, seed=8,
-        codec_choices=["adpcm_ima", "pcm_s16le"],
-        codec_weights=[0.6, 0.4])
-
-    layouts = {}
-    for tag, df, nf in (("cheap_1f", cheap, 1), ("cheap_8f", cheap, 8),
-                        ("adpcm_1f", expensive, 1),
-                        ("adpcm_8f", expensive, 8)):
-        p = str(tmp_path / tag)
-        df.repartition(nf).write.parquet(p)
-        layouts[tag] = p
-
-    cores = spark.sparkContext.defaultParallelism
-
-    def decide(tag):
-        job = ClipGraphJob(input_dir=layouts[tag],
-                           output_dir=str(tmp_path / f"o_{tag}"),
-                           checkpoint_dir=str(tmp_path / f"c_{tag}"),
-                           salt_buckets="auto")
-        return job, job._effective_salt_buckets(
-            spark.read.parquet(layouts[tag]))
-
-    _, b = decide("cheap_1f")
-    assert b == 0                      # starved scan, cheap codec: no
-    _, b = decide("cheap_8f")
-    assert b == 0                      # healthy scan: no
-    job_hot, b = decide("adpcm_1f")
-    assert b == cores                  # starved + expensive: salt
-    if cores >= 8:
-        _, b = decide("adpcm_8f")
-        assert b == 0                  # expensive but healthy scan: no
-
-    # cached: a later (cheap) batch does NOT flip the batch-0 verdict
-    assert job_hot._effective_salt_buckets(cheap) == cores
-    # and the salted path actually spreads the one-file layout
-    n_parts = (job_hot.prepare_batch(spark.read.parquet(layouts["adpcm_1f"]))
-               .select(F.spark_partition_id().alias("p"))
-               .groupBy("p").count().count())
-    assert n_parts >= min(cores, 6)
-
-    with pytest.raises(ValueError, match="salt_buckets"):
-        ClipGraphJob(input_dir=layouts["cheap_1f"],
-                     output_dir=str(tmp_path / "o_bad"),
-                     checkpoint_dir=str(tmp_path / "c_bad"),
-                     salt_buckets="always")
+    assert n_parts("base") <= 2        # one small file → ~one split
+    # salt spreads the hot layout
+    assert n_parts("salted", salt_buckets=8, salt_cols=("codec",)) >= 6
 
 
 def test_late_rows_dropped_and_counted(spark, tmp_path):

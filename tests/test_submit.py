@@ -1,5 +1,5 @@
-"""spark-submit entry point (scripts/submit_clip_graph.py): both the
-spec-driven and hardwired pipelines run end-to-end through main()."""
+"""spark-submit entry point (scripts/submit_clip_graph.py): the
+flagship spec and a user spec both run end-to-end through main()."""
 
 from __future__ import annotations
 
@@ -42,9 +42,11 @@ def test_submit_hardwired(spark, clip_input, capsys):
     assert summary["batches"] >= 2
     assert summary["latency_ms_p99"] > 0
 
+    from dataflow_flex_templates_spark.plans.compiler import ORDINAL_COL
     from dataflow_flex_templates_spark.streaming.sink import ExactlyOnceTable
 
-    t = ExactlyOnceTable(root + "/out_hw/nodes_clip", ["clip_id"], "__seq__")
+    t = ExactlyOnceTable(root + "/out_hw/nodes_clip", ["clip_id"],
+                         ORDINAL_COL)
     assert t.read_merged(spark).count() == 200
 
 
@@ -64,6 +66,13 @@ def test_submit_spec_driven(spark, clip_input, capsys):
                  "role": "property", "type": "String"},
             ],
         }],
+        # post-load action: runs only once the drain has completed
+        "actions": [{
+            "name": "mark_done", "type": "bigquery",
+            "execute_after": "edges",
+            "options": [{"sql": "CREATE OR REPLACE TEMP VIEW "
+                                "submit_edges_done AS SELECT 1 AS ok"}],
+        }],
     }
     with open(root + "/spec.json", "w") as f:
         json.dump(spec, f)
@@ -71,6 +80,7 @@ def test_submit_spec_driven(spark, clip_input, capsys):
                 "--checkpoint", root + "/ckpt_sp",
                 "--spec", root + "/spec.json", "--timeout-s", "600"])
     assert rc == 0
+    assert spark.catalog.tableExists("submit_edges_done")
 
     from dataflow_flex_templates_spark.streaming.sink import ExactlyOnceTable
 
