@@ -30,8 +30,22 @@ repo-wide convention).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def _persisted(df: DataFrame):
+    """Cache ``df`` for the block: every bisection pass re-reads it,
+    and without the cache each of the 30-40 passes re-runs the
+    upstream lineage (joins, UDFs) of a derived input."""
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def exact_quantiles(df: DataFrame, value_col: str,
@@ -57,30 +71,31 @@ def exact_quantiles(df: DataFrame, value_col: str,
     out_schema = "p_permille long, q_value long"
     vals = (df.select(F.col(value_col).cast("long").alias("v"))
             .where(F.col("v").isNotNull()))
-    head = vals.agg(F.count(F.lit(1)).alias("n"),
-                    F.min("v").alias("lo"),
-                    F.max("v").alias("hi")).first()
-    n = head["n"]
-    if n == 0:
-        return spark.createDataFrame([], out_schema)
-    ranks = {p: 1 + (p * (n - 1)) // 1000 for p in probs}
-    # invariant per probe: the answer lies in [lo, hi]
-    bounds = {p: [head["lo"], head["hi"]] for p in probs}
-    while True:
-        mids = {p: (lo + hi) // 2
-                for p, (lo, hi) in bounds.items() if lo < hi}
-        if not mids:
-            break
-        row = vals.agg(*[
-            F.sum(F.when(F.col("v") <= F.lit(m), 1).otherwise(0))
-             .alias(f"c{p}") for p, m in mids.items()]).first()
-        for p, m in mids.items():
-            if row[f"c{p}"] >= ranks[p]:
-                bounds[p][1] = m      # answer is <= mid
-            else:
-                bounds[p][0] = m + 1  # CDF too small: answer > mid
-    return spark.createDataFrame(
-        [(p, bounds[p][0]) for p in probs], out_schema)
+    with _persisted(vals):
+        head = vals.agg(F.count(F.lit(1)).alias("n"),
+                        F.min("v").alias("lo"),
+                        F.max("v").alias("hi")).first()
+        n = head["n"]
+        if n == 0:
+            return spark.createDataFrame([], out_schema)
+        ranks = {p: 1 + (p * (n - 1)) // 1000 for p in probs}
+        # invariant per probe: the answer lies in [lo, hi]
+        bounds = {p: [head["lo"], head["hi"]] for p in probs}
+        while True:
+            mids = {p: (lo + hi) // 2
+                    for p, (lo, hi) in bounds.items() if lo < hi}
+            if not mids:
+                break
+            row = vals.agg(*[
+                F.sum(F.when(F.col("v") <= F.lit(m), 1).otherwise(0))
+                 .alias(f"c{p}") for p, m in mids.items()]).first()
+            for p, m in mids.items():
+                if row[f"c{p}"] >= ranks[p]:
+                    bounds[p][1] = m      # answer is <= mid
+                else:
+                    bounds[p][0] = m + 1  # CDF too small: answer > mid
+        return spark.createDataFrame(
+            [(p, bounds[p][0]) for p in probs], out_schema)
 
 
 def exact_quantiles_grouped(df: DataFrame, value_col: str,
@@ -118,51 +133,52 @@ def exact_quantiles_grouped(df: DataFrame, value_col: str,
                       F.col(value_col).cast("long").alias("v"))
             .where(F.col(group_col).isNotNull()
                    & F.col(value_col).isNotNull()))
-    g_field = vals.schema.fields[0]
-    heads = vals.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n"), F.min("v").alias("lo"),
-        F.max("v").alias("hi")).collect()
-    if len(heads) > max_groups:
-        raise ValueError(
-            f"{len(heads)} groups exceeds max_groups={max_groups} — "
-            f"grouped bisection keeps per-group bounds driver-side; "
-            f"use bottomk_quantiles for high-cardinality groups")
-    # bounds[(g, p)] = [lo, hi]; rank r = 1 + (p*(n-1)) div 1000
-    ranks, bounds = {}, {}
-    for h in heads:
-        for p in probs:
-            ranks[(h["g"], p)] = 1 + (p * (h["n"] - 1)) // 1000
-            bounds[(h["g"], p)] = [h["lo"], h["hi"]]
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
+    with _persisted(vals):
+        g_field = vals.schema.fields[0]
+        heads = vals.groupBy("g").agg(
+            F.count(F.lit(1)).alias("n"), F.min("v").alias("lo"),
+            F.max("v").alias("hi")).collect()
+        if len(heads) > max_groups:
+            raise ValueError(
+                f"{len(heads)} groups exceeds max_groups={max_groups} — "
+                f"grouped bisection keeps per-group bounds driver-side; "
+                f"use bottomk_quantiles for high-cardinality groups")
+        # bounds[(g, p)] = [lo, hi]; rank r = 1 + (p*(n-1)) div 1000
+        ranks, bounds = {}, {}
+        for h in heads:
+            for p in probs:
+                ranks[(h["g"], p)] = 1 + (p * (h["n"] - 1)) // 1000
+                bounds[(h["g"], p)] = [h["lo"], h["hi"]]
+        from pyspark.sql.types import (
+            LongType,
+            StructField,
+            StructType,
+        )
 
-    mid_schema = StructType([
-        g_field, StructField("p", LongType()),
-        StructField("mid", LongType())])
-    while True:
-        mids = [(g, p, (lo + hi) // 2)
-                for (g, p), (lo, hi) in bounds.items() if lo < hi]
-        if not mids:
-            break
-        mdf = spark.createDataFrame(mids, mid_schema)
-        counted = (vals.join(F.broadcast(mdf), on="g")
-                   .groupBy("g", "p")
-                   .agg(F.sum(F.when(F.col("v") <= F.col("mid"), 1)
-                              .otherwise(0)).alias("c"),
-                        F.first("mid").alias("mid")).collect())
-        for r in counted:
-            key = (r["g"], r["p"])
-            if r["c"] >= ranks[key]:
-                bounds[key][1] = r["mid"]
-            else:
-                bounds[key][0] = r["mid"] + 1
-    out_schema = StructType([
-        g_field, StructField("p_permille", LongType()),
-        StructField("q_value", LongType())])
-    return spark.createDataFrame(
-        [(g, p, bounds[(g, p)][0]) for (g, p) in sorted(
-            bounds, key=repr)], out_schema) \
-        .withColumnRenamed("g", group_col)
+        mid_schema = StructType([
+            g_field, StructField("p", LongType()),
+            StructField("mid", LongType())])
+        while True:
+            mids = [(g, p, (lo + hi) // 2)
+                    for (g, p), (lo, hi) in bounds.items() if lo < hi]
+            if not mids:
+                break
+            mdf = spark.createDataFrame(mids, mid_schema)
+            counted = (vals.join(F.broadcast(mdf), on="g")
+                       .groupBy("g", "p")
+                       .agg(F.sum(F.when(F.col("v") <= F.col("mid"), 1)
+                                  .otherwise(0)).alias("c"),
+                            F.first("mid").alias("mid")).collect())
+            for r in counted:
+                key = (r["g"], r["p"])
+                if r["c"] >= ranks[key]:
+                    bounds[key][1] = r["mid"]
+                else:
+                    bounds[key][0] = r["mid"] + 1
+        out_schema = StructType([
+            g_field, StructField("p_permille", LongType()),
+            StructField("q_value", LongType())])
+        return spark.createDataFrame(
+            [(g, p, bounds[(g, p)][0]) for (g, p) in sorted(
+                bounds, key=repr)], out_schema) \
+            .withColumnRenamed("g", group_col)

@@ -665,6 +665,24 @@ def bottomk_quantiles(
             .select(*group_cols, "p_permille", "q_value"))
 
 
+def _mg_merge(acc, vc, k: int):
+    """One Misra-Gries MERGE-REDUCE step over pandas Series of counts
+    indexed by key: add ``vc`` into ``acc`` (None = empty), and when
+    more than ``k`` keys remain subtract the (k+1)-th largest count and
+    keep the positives. Counts stay int64: ``Series.add`` with
+    ``fill_value`` aligns through NaN and so adds in float64, exact
+    only below 2^53; reindexing both sides with an integer fill first
+    keeps the sum integral."""
+    if acc is not None:
+        keys = acc.index.union(vc.index)
+        vc = acc.reindex(keys, fill_value=0) + vc.reindex(keys, fill_value=0)
+    acc = vc.astype("int64")
+    if len(acc) > k:
+        acc = acc - acc.nlargest(k + 1).iloc[-1]
+        acc = acc[acc > 0]
+    return acc
+
+
 def mg_summaries(df: DataFrame, key_col: str, k: int) -> DataFrame:
     """Per-partition Misra-Gries frequency summaries: ≤ ``k`` rows
     ``(key_col, __lb)`` per input partition, where ``__lb`` is a
@@ -697,15 +715,9 @@ def mg_summaries(df: DataFrame, key_col: str, k: int) -> DataFrame:
     def fold(batches):
         acc = None
         for pdf in batches:
-            vc = pdf[key_col].value_counts()
-            acc = vc if acc is None else acc.add(vc, fill_value=0)
-            if len(acc) > k:
-                dec = acc.nlargest(k + 1).iloc[-1]
-                acc = acc - dec
-                acc = acc[acc > 0]
+            acc = _mg_merge(acc, pdf[key_col].value_counts(), k)
         if acc is not None and len(acc):
-            yield pd.DataFrame({key_col: acc.index,
-                                "__lb": acc.values.astype("int64")})
+            yield pd.DataFrame({key_col: acc.index, "__lb": acc.values})
 
     return keyed.mapInPandas(fold, out_schema)
 

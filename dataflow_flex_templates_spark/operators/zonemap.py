@@ -65,6 +65,10 @@ def zone_map(df: DataFrame, shard_cols: list[str],
     """
     if not shard_cols or not stat_cols:
         raise ValueError("shard_cols and stat_cols must be non-empty")
+    for name, cols in (("shard_cols", shard_cols), ("stat_cols", stat_cols)):
+        dups = sorted({c for c in cols if cols.count(c) > 1})
+        if dups:
+            raise ValueError(f"duplicate {name}: {dups}")
     _check_clash(df.select(*shard_cols), *_stat_names(stat_cols))
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in stat_cols:
@@ -93,6 +97,10 @@ def prune_shards(zmap: DataFrame, col: str, lo=None, hi=None,
     table, and the index side is |shards|-sized, so the join
     broadcasts.
     """
+    missing = [c for c in _stat_names([col])[1:] if c not in zmap.columns]
+    if missing:
+        raise ValueError(
+            f"zone map has no stats for {col!r}: missing {missing}")
     mn, mx = F.col(f"{col}_min"), F.col(f"{col}_max")
     overlap = mn.isNotNull()
     if lo is not None:

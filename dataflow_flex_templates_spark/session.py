@@ -1,8 +1,12 @@
 """SparkSession factory with scale-aware defaults.
 
-Local testing runs single-JVM (local[N]); the configs below are the
+Every session runs single-JVM (local[N]); most configs below are the
 ones that matter at cluster scale too: AQE (runtime re-planning +
 skew-join splitting), sane shuffle partitioning, Arrow for pandas UDFs.
+One is local-only: streaming checkpoints go through the FileSystem-based
+checkpoint manager, which relies on rename being atomic, as it is on a
+local disk; a deployment that checkpoints to HDFS or an object store
+should keep Spark's default manager.
 """
 
 from __future__ import annotations
@@ -80,6 +84,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
+        # Streaming checkpoints (offsets/commits logs, HDFS and RocksDB
+        # state files) go through Hadoop's FileSystem API rather than
+        # the default FileContext one. Same tmp-file + rename protocol
+        # and .crc sidecars, but no getFileLinkStatus per file: on a
+        # local filesystem without native libhadoop that call spawns a
+        # `readlink` process for every checkpoint file. Every session
+        # here is local[N] on a local disk, where rename(2) is atomic.
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
     )
     if state_store is not None:
         b = b.config("spark.sql.streaming.stateStore.providerClass",

@@ -7,7 +7,8 @@ Neo4jBlockingUnwindFn.java:62-140) with a micro-batch commit protocol:
   foreachBatch(batch_id, df):
     1. if batch_id already committed → skip (restart replays are no-ops)
     2. write the batch's rows under data/batch=<id>/ (overwrite: a
-       half-written attempt from a crash is safely clobbered)
+       half-written attempt from a crash is safely clobbered; no
+       _SUCCESS marker, since step 3 is the commit)
     3. atomically record the commit (tmp-file + os.rename) together
        with per-partition lineage counts and metrics
 
@@ -116,7 +117,7 @@ class ExactlyOnceTable:
                 F.lit(batch_id).cast("long") * F.lit(1 << 31)
                 + F.monotonically_increasing_id() % (1 << 31),
             )
-        out.write.mode("overwrite").parquet(batch_dir)
+        _parquet_writer(out).parquet(batch_dir)
 
         # Per-partition lineage: rows per task partition, read from the
         # written parquet FOOTERS (the audit-sink analogue of
@@ -185,7 +186,7 @@ class ExactlyOnceTable:
                             keep_order=True).select(*out_order)
         staging = os.path.join(self._data_dir,
                                f"_basestage_{uuid.uuid4().hex[:8]}")
-        df.repartition(partitions).write.mode("overwrite").parquet(staging)
+        _parquet_writer(df.repartition(partitions)).parquet(staging)
         prev = self.base_info()
         base_dir = os.path.join(self._data_dir, f"base-{through}")
         if os.path.isdir(base_dir):
@@ -427,6 +428,17 @@ class ExactlyOnceTable:
                            F.lit("update_after").alias("_change_type"))
         return (ins.unionByName(dels).unionByName(upd_b).unionByName(upd_a)
                 .select(*out_schema))
+
+
+def _parquet_writer(df: DataFrame):
+    """Overwrite-mode parquet writer for table data. No ``_SUCCESS``
+    marker: the table's ``_commits`` record is the commit, and the
+    marker plus its ``.crc`` are two more files per table per batch
+    (each a spawned ``chmod`` on a local filesystem without native
+    libhadoop) that nothing reads."""
+    return (df.write.mode("overwrite")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
+                    "false"))
 
 
 def _publish_json(path: str, record: dict) -> None:

@@ -653,3 +653,22 @@ def test_mg_summary_lower_bound_guarantee(spark):
         got = lb.get(w, 0)
         assert got <= n
         assert n - got <= len(rows) // (k + 1) + 1
+
+
+def test_mg_merge_keeps_int64_counts():
+    """A merge that brings new keys must keep the accumulator int64
+    and exact (a float64 add loses 2^53 + 1), both with and without a
+    reduce step."""
+    import pandas as pd
+
+    from dataflow_flex_templates_spark.operators.sketch import _mg_merge
+
+    acc = _mg_merge(None, pd.Series({"a": 3, "b": 1}), k=8)
+    acc = _mg_merge(acc, pd.Series({"b": 2, "c": 5}), k=8)
+    assert acc.dtype == "int64"
+    assert acc.to_dict() == {"a": 3, "b": 3, "c": 5}
+    # k=2 forces the reduce: subtract the 3rd largest (3), keep > 0
+    big = pd.Series({"d": 2**53 + 1})
+    red = _mg_merge(acc, big, k=2)
+    assert red.dtype == "int64"
+    assert red.to_dict() == {"c": 2, "d": 2**53 + 1 - 3}

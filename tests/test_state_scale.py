@@ -192,3 +192,40 @@ def test_get_spark_state_store_validation():
 
     with pytest.raises(ValueError, match="unknown state_store"):
         get_spark(state_store="bogus")
+
+
+def test_get_spark_checkpoint_file_manager(spark, tmp_path):
+    """Sessions from get_spark checkpoint through Hadoop's FileSystem
+    API (no per-file FileContext link lookup), and the checkpoint it
+    writes keeps every integrity file: `.crc` sidecars on the offsets
+    and commits logs, and on each state file both Spark's state-file
+    checksum (`<v>.delta.crc` or `<v>.changelog.crc`) and its `.crc`."""
+    assert spark.conf.get(
+        "spark.sql.streaming.checkpointFileManagerClass", None) == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager")
+
+    inp, ck = str(tmp_path / "in"), str(tmp_path / "ck")
+    os.makedirs(inp)
+    _write_batches(inp, 1, 12, lambda b, i: i % 4)
+    q = (spark.readStream.schema(SCHEMA).parquet(inp)
+         .groupBy("k").count()
+         .writeStream.outputMode("update").format("noop")
+         .option("checkpointLocation", ck)
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(300), "stateful stream did not drain"
+
+    for log in ("offsets", "commits"):
+        assert {"0", ".0.crc"} <= set(os.listdir(os.path.join(ck, log)))
+    op_dir = os.path.join(ck, "state", "0")
+    parts = [p for p in os.listdir(op_dir) if p.isdigit()]
+    assert parts
+    for p in parts:
+        pdir = os.path.join(op_dir, p)
+        names = {n for n in os.listdir(pdir)
+                 if os.path.isfile(os.path.join(pdir, n))}
+        data = [n for n in names
+                if not n.startswith(".") and not n.endswith(".crc")]
+        assert data, f"no state file in partition {p}: {sorted(names)}"
+        for n in data:
+            assert {f"{n}.crc", f".{n}.crc"} <= names, sorted(names)

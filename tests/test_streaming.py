@@ -503,6 +503,57 @@ def test_compaction_and_time_travel(spark, tmp_path):
     assert got2 == got
 
 
+def test_table_dirs_hold_no_success_marker(spark, tmp_path):
+    """The `_commits` record is a table's commit, so its data
+    directories carry no `_SUCCESS` marker (nor its `.crc`): after
+    `write_batch`, `data/batch=<id>/` holds only parquet parts (and
+    their `.crc`s), and the record's `rows`/`partitions` are the
+    parts' footer counts. The same holds for `compact()`'s
+    `base-<id>/` and its manifest."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from dataflow_flex_templates_spark.streaming.sink import (
+        ExactlyOnceTable,
+    )
+
+    def footer_counts(d):
+        names = os.listdir(d)
+        assert not [n for n in names if "_SUCCESS" in n], names
+        assert {n for n in names if not n.endswith(".crc")} == {
+            n for n in names if n.endswith(".parquet")}
+        counts = {}
+        for n in names:
+            if n.endswith(".parquet"):
+                pid = n.split("-")[1]
+                counts[pid] = (counts.get(pid, 0)
+                               + pq.ParquetFile(os.path.join(d, n))
+                               .metadata.num_rows)
+        assert counts
+        return counts
+
+    t = ExactlyOnceTable(str(tmp_path / "t"), key_cols=["k"],
+                         order_col="seq")
+    data = os.path.join(t.path, "data")
+    for b in (0, 1):
+        df = spark.createDataFrame(
+            [(f"k{i}", 100 * b + i) for i in range(30)],
+            "k string, seq long").repartition(3)
+        rec = t.write_batch(df, b)
+        counts = footer_counts(os.path.join(data, f"batch={b}"))
+        assert rec["partitions"] == counts
+        assert rec["rows"] == sum(counts.values()) == 30
+        assert t.commit_info(b) == rec
+
+    manifest = t.compact(spark, partitions=2)
+    counts = footer_counts(os.path.join(data, manifest["dir"]))
+    assert manifest["dir"] == "base-1"
+    assert manifest["partitions"] == counts
+    assert sum(counts.values()) == 30          # LWW pre-merged: 30 keys
+    assert t.base_info() == manifest
+
+
 def test_lineage_surface(spark, tmp_path):
     """Per-partition lineage is queryable: one row per (batch,
     partition), row counts summing to the committed totals."""

@@ -48,6 +48,18 @@ def test_zone_map_guards(spark):
     clash = df.withColumnRenamed("s", "v_min")
     with pytest.raises(ValueError, match="clash"):
         zone_map(clash, ["shard", "v_min"], ["v"])
+    with pytest.raises(ValueError, match=r"duplicate shard_cols: \['shard'\]"):
+        zone_map(df, ["shard", "shard"], ["v"])
+    with pytest.raises(ValueError, match=r"duplicate stat_cols: \['v'\]"):
+        zone_map(df, ["shard"], ["v", "s", "v"])
+
+
+def test_prune_shards_names_missing_stats(spark):
+    zm = zone_map(spark.createDataFrame(ROWS, SCHEMA), ["shard"], ["v"])
+    with pytest.raises(ValueError, match="'s_min', 's_max', 's_nulls'"):
+        prune_shards(zm, "s", "a", "b")
+    with pytest.raises(ValueError, match=r"missing \['v_nulls'\]"):
+        prune_shards(zm.drop("v_nulls"), "v", 0, 5)
 
 
 def test_zone_map_single_exchange(spark):
