@@ -19,6 +19,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataflow_flex_templates_spark.streaming.fold import (
+    await_or_raise,
+    run_fold,
+)
+
 # --------------------------------------------------------------------------
 # Flagship job spec: the reference's northwind 3-target shape re-expressed
 # over the TPC-H-ish testdata (orders ⋈ lineitem ⋈ customer as the SQL
@@ -97,16 +102,14 @@ def _load(spark: SparkSession, sf_dir: str) -> None:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
-def _await_or_raise(q, name: str, timeout_s: int = 600) -> None:
-    """awaitTermination with a hard failure on timeout: an availableNow
-    query that hasn't finished means the sink parquet is partial —
-    surfacing that as an explicit error beats an oracle hash mismatch
-    downstream."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(
-            f"{name}: availableNow query timed out ({timeout_s} s) — "
-            "refusing to read partial output")
+def _write_chunks(spark: SparkSession, pdf, schema, path: str,
+                  rows_per_file: int) -> None:
+    """Append ``pdf`` to ``path`` as one parquet file per
+    ``rows_per_file`` rows, in row order: a file stream reading it with
+    ``maxFilesPerTrigger`` replays it in exactly those micro-batches."""
+    for i in range(0, len(pdf), rows_per_file):
+        spark.createDataFrame(pdf.iloc[i:i + rows_per_file], schema=schema) \
+            .coalesce(1).write.mode("append").parquet(path)
 
 
 def _run_flagship(spark: SparkSession, sf_dir: str):
@@ -260,7 +263,7 @@ def _q_windowed_topk(spark, sf_dir):
     """Windowed heavy hitters (SURVEY §2.10 extension): top-5 users by
     event count per 1-hour tumbling window, ties broken by user_id.
     Streaming exactness of the same operator (rank applied per
-    foreachBatch over the append-mode count stream) is pytest-proven
+    micro-batch over the append-mode count stream) is pytest-proven
     in tests/test_streaming.py; this is the batch plan."""
     from dataflow_flex_templates_spark.streaming.windows import (
         topk_per_window,
@@ -547,16 +550,12 @@ def _q_ewma_stream_chars(spark, sf_dir):
     schema = "source string, event_time timestamp, n_chars long"
     root = tempfile.mkdtemp(prefix="entry_ewma_")
     inp = os.path.join(root, "in")
-    chunk = len(pdf) // 8 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pdf, schema, inp, len(pdf) // 8 + 1)
     far = EPOCH + timedelta(days=30)
     flush = pd.DataFrame(
         [(s, far, 0) for s in sorted(pdf["source"].unique())],
         columns=["source", "event_time", "n_chars"])
-    spark.createDataFrame(flush, schema=schema) \
-        .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, flush, schema, inp, len(flush))
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(inp)
@@ -567,7 +566,7 @@ def _q_ewma_stream_chars(spark, sf_dir):
          .option("path", out_dir)
          .option("checkpointLocation", os.path.join(root, "ck"))
          .trigger(availableNow=True).start())
-    _await_or_raise(q, "ewma_stream_chars")
+    await_or_raise(q, "ewma_stream_chars")
     epoch_us = int(EPOCH.timestamp()) * 1_000_000
     return (spark.read.parquet(out_dir)
             .filter(F.col("event_time") < F.lit(EPOCH + timedelta(days=1)))
@@ -748,8 +747,8 @@ def _q_specaugment_plan(spark, sf_dir):
 
 def _q_stream_srt_emit(spark, sf_dir):
     """Streaming twin of subtitle_srt: documents replayed as a chunked
-    file stream, each micro-batch rendered to SRT fields inside
-    foreachBatch and appended exactly-once-per-run to parquet. The
+    file stream, each micro-batch rendered to SRT fields and committed
+    exactly once by `run_fold` (streaming/fold.py). The
     pipeline is row-local per DOCUMENT (every cue of a doc derives
     from its one input row, and the srt_seq window partitions by
     doc_id), so batch boundaries cannot split a document's sequence —
@@ -771,24 +770,17 @@ def _q_stream_srt_emit(spark, sf_dir):
     schema = "doc_id long, dur_ms long, text string"
     root = tempfile.mkdtemp(prefix="entry_srt_stream_")
     inp = os.path.join(root, "in")
-    chunk = len(pdf) // 8 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pdf, schema, inp, len(pdf) // 8 + 1)
 
-    out_dir = os.path.join(root, "out")
-
-    def render(batch_df, batch_id):
-        (srt_render(subtitle_cues(batch_df, cue_ms=3000))
-         .write.mode("append").parquet(out_dir))
-
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(render)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_srt_emit")
-    return spark.read.parquet(out_dir)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    return run_fold(
+        spark, stream, os.path.join(root, "fold"),
+        lambda batch, _: {"cues": srt_render(subtitle_cues(batch,
+                                                           cue_ms=3000))},
+        logs={"cues": "doc_id long, srt_seq int, cue_idx long, "
+                      "start_ms long, end_ms long, timing string, "
+                      "text string, srt_block string"})["cues"]
 
 
 def _q_stream_mixture_monitor(spark, sf_dir):
@@ -821,15 +813,11 @@ def _q_stream_mixture_monitor(spark, sf_dir):
     schema = "source string, event_time timestamp, n_chars long"
     root = tempfile.mkdtemp(prefix="entry_mixmon_")
     inp = os.path.join(root, "in")
-    chunk = len(pdf) // 8 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pdf, schema, inp, len(pdf) // 8 + 1)
     far = EPOCH + timedelta(days=30)
     flush = pd.DataFrame([("__flush__", far, 0)],
                          columns=["source", "event_time", "n_chars"])
-    spark.createDataFrame(flush, schema=schema) \
-        .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, flush, schema, inp, len(flush))
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(inp))
@@ -842,7 +830,7 @@ def _q_stream_mixture_monitor(spark, sf_dir):
          .option("path", out_dir)
          .option("checkpointLocation", os.path.join(root, "ck"))
          .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_mixture_monitor")
+    await_or_raise(q, "stream_mixture_monitor")
     epoch_us = int(EPOCH.timestamp()) * 1_000_000
     got = (spark.read.parquet(out_dir)
            .filter(F.col("source") != "__flush__")
@@ -914,15 +902,12 @@ def _q_stream_wer(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="entry_swer_")
     lin, rin = os.path.join(root, "l"), os.path.join(root, "r")
     chunk = len(lrows) // 6 + 1
-    for i in range(0, len(lrows), chunk):
-        spark.createDataFrame(
-            pd.DataFrame(lrows[i:i + chunk],
-                         columns=["clip_id", "ref", "l_time"]),
-            ref_schema).coalesce(1).write.mode("append").parquet(lin)
-        spark.createDataFrame(
-            pd.DataFrame(rrows[i:i + chunk],
-                         columns=["clip_id", "hyp", "r_time"]),
-            hyp_schema).coalesce(1).write.mode("append").parquet(rin)
+    _write_chunks(spark, pd.DataFrame(lrows, columns=["clip_id", "ref",
+                                                      "l_time"]),
+                  ref_schema, lin, chunk)
+    _write_chunks(spark, pd.DataFrame(rrows, columns=["clip_id", "hyp",
+                                                      "r_time"]),
+                  hyp_schema, rin, chunk)
 
     ls = (spark.readStream.schema(ref_schema)
           .option("maxFilesPerTrigger", 2).parquet(lin)
@@ -941,7 +926,7 @@ def _q_stream_wer(spark, sf_dir):
     q = (scored.writeStream.outputMode("append").format("parquet")
          .option("path", out_dir).option("checkpointLocation", ck)
          .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_wer")
+    await_or_raise(q, "stream_wer")
     return spark.read.parquet(out_dir).select(
         "clip_id", "ref_words", "hyp_words", "wer_distance",
         "wer_permille")
@@ -1108,16 +1093,12 @@ def _q_stream_session_assembly(spark, sf_dir):
     schema = "user_id long, ts timestamp, event_id long, utt string"
     root = tempfile.mkdtemp(prefix="entry_sess_asm_")
     inp = os.path.join(root, "in")
-    chunk = len(pdf) // 8 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pdf, schema, inp, len(pdf) // 8 + 1)
     far = pdf["ts"].max() + timedelta(days=30)
     flush = pd.DataFrame(
         [(u, far, 0, "") for u in sorted(pdf["user_id"].unique())],
         columns=["user_id", "ts", "event_id", "utt"])
-    spark.createDataFrame(flush, schema=schema) \
-        .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, flush, schema, inp, len(flush))
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(inp)
@@ -1133,7 +1114,7 @@ def _q_stream_session_assembly(spark, sf_dir):
          .option("path", out_dir)
          .option("checkpointLocation", os.path.join(root, "ck"))
          .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_session_assembly")
+    await_or_raise(q, "stream_session_assembly")
     cutoff = F.lit(far - timedelta(days=1))
     return (spark.read.parquet(out_dir)
             .filter(F.col("window_start") < cutoff)
@@ -1337,34 +1318,20 @@ def _q_stream_shard_plan(spark, sf_dir):
     schema = "doc_id long, source string, size_bytes long"
     root = tempfile.mkdtemp(prefix="entry_shard_stream_")
     inp = os.path.join(root, "in")
-    chunk = len(docs) // 5 + 1
-    for i in range(0, len(docs), chunk):
-        spark.createDataFrame(docs.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, docs, schema, inp, len(docs) // 5 + 1)
 
-    assigned_dir = os.path.join(root, "assigned")
-    tails_root = os.path.join(root, "tails")
-    cur = {"tails": os.path.join(tails_root, "init")}
-    spark.createDataFrame([], "source string, cum_bytes long") \
-        .write.parquet(cur["tails"])
+    def step(batch, state):
+        assigned, tails = shard_apply_batch(batch, state["tails"],
+                                            target_bytes=2000)
+        return {"assigned": assigned, "tails": tails}
 
-    def fold(batch_df, batch_id):
-        tails = spark.read.parquet(cur["tails"])
-        assigned, new_tails = shard_apply_batch(
-            batch_df, tails, target_bytes=2000)
-        assigned.write.mode("append").parquet(assigned_dir)
-        nxt = os.path.join(tails_root, f"b{batch_id}")
-        new_tails.write.parquet(nxt)
-        cur["tails"] = nxt
-
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_shard_plan")
-
-    assigned = spark.read.parquet(assigned_dir)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    assigned = run_fold(
+        spark, stream, os.path.join(root, "fold"), step,
+        snapshots={"tails": "source string, cum_bytes long"},
+        logs={"assigned": "source string, doc_id long, size_bytes long, "
+                          "shard_idx long"})["assigned"]
     return (assigned.groupBy("source", "shard_idx")
             .agg(F.count("*").alias("n_rows"),
                  F.sum("size_bytes").alias("shard_bytes"),
@@ -1437,35 +1404,20 @@ def _q_stream_zone_map(spark, sf_dir):
               "n_chars long, lang string")
     root = tempfile.mkdtemp(prefix="entry_zonemap_stream_")
     inp = os.path.join(root, "in")
-    chunk = len(docs) // 5 + 1
-    for i in range(0, len(docs), chunk):
-        spark.createDataFrame(docs.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, docs, schema, inp, len(docs) // 5 + 1)
 
     store_schema = ("source string, file_id long, n_rows long, "
                     "n_chars_min long, n_chars_max long, "
                     "n_chars_nulls long, lang_min string, "
                     "lang_max string, lang_nulls long")
-    store_root = os.path.join(root, "store")
-    cur = {"store": os.path.join(store_root, "init")}
-    spark.createDataFrame([], store_schema).write.parquet(cur["store"])
-
-    def fold(batch_df, batch_id):
-        store = spark.read.parquet(cur["store"])
-        _, new_store = zone_map_apply_batch(
-            batch_df, store, ["source", "file_id"],
-            ["n_chars", "lang"])
-        nxt = os.path.join(store_root, f"b{batch_id}")
-        new_store.write.parquet(nxt)
-        cur["store"] = nxt
-
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_zone_map")
-    return spark.read.parquet(cur["store"])
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    return run_fold(
+        spark, stream, os.path.join(root, "fold"),
+        lambda batch, state: {"store": zone_map_apply_batch(
+            batch, state["store"], ["source", "file_id"],
+            ["n_chars", "lang"])[1]},
+        snapshots={"store": store_schema})["store"]
 
 
 def _q_token_heavy_hitters(spark, sf_dir):
@@ -1581,25 +1533,16 @@ def _q_stream_decontaminate(spark, sf_dir):
     schema = "doc_id long, text string"
     root = tempfile.mkdtemp(prefix="entry_decon_stream_")
     inp = os.path.join(root, "in")
-    chunk = len(pdf) // 6 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pdf, schema, inp, len(pdf) // 6 + 1)
 
     bench_df = spark.createDataFrame(bench, schema=schema)
-    out_dir = os.path.join(root, "out")
-
-    def gate(batch_df, batch_id):
-        decontaminate(batch_df, bench_df, n=8) \
-            .write.mode("append").parquet(out_dir)
-
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(gate)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_decontaminate")
-    return spark.read.parquet(out_dir)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    return run_fold(
+        spark, stream, os.path.join(root, "fold"),
+        lambda batch, _: {"verdicts": decontaminate(batch, bench_df, n=8)},
+        logs={"verdicts": "doc_id long, hit_ngrams long, "
+                          "contaminated boolean"})["verdicts"]
 
 
 def _q_stream_compaction(spark, sf_dir):
@@ -1630,49 +1573,24 @@ def _q_stream_compaction(spark, sf_dir):
     schema = "source string, file_id long, size_bytes long"
     root = tempfile.mkdtemp(prefix="entry_compaction_stream_")
     inp = os.path.join(root, "in")
-    chunk = len(files) // 5 + 1
-    for i in range(0, len(files), chunk):
-        spark.createDataFrame(files.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, files, schema, inp, len(files) // 5 + 1)
 
-    out_dir = os.path.join(root, "out")
-    state_root = os.path.join(root, "state")
-    open_schema = ("source string, file_id long, size_bytes long, "
-                   "group_idx long")
-    cur = {"tails": os.path.join(state_root, "t_init"),
-           "open": os.path.join(state_root, "o_init")}
-    spark.createDataFrame([], "source string, cum_bytes long") \
-        .write.parquet(cur["tails"])
-    spark.createDataFrame([], open_schema).write.parquet(cur["open"])
-
-    def fold(batch_df, batch_id):
-        tails = spark.read.parquet(cur["tails"])
-        open_bin = spark.read.parquet(cur["open"])
-        emitted, new_tails, new_open = compaction_apply_batch(
-            batch_df, tails, open_bin, target_bytes=3000,
+    def step(batch, state):
+        emitted, tails, open_bin = compaction_apply_batch(
+            batch, state["tails"], state["open"], target_bytes=3000,
             min_file_bytes=1000)
-        emitted.select("source", "file_id", "size_bytes", "group_idx",
-                       "action") \
-            .write.mode("append").parquet(out_dir)
-        nt = os.path.join(state_root, f"t{batch_id}")
-        no = os.path.join(state_root, f"o{batch_id}")
-        new_tails.write.parquet(nt)
-        new_open.select("source", "file_id", "size_bytes",
-                        "group_idx").write.parquet(no)
-        cur["tails"], cur["open"] = nt, no
+        return {"emitted": emitted, "tails": tails, "open": open_bin}
 
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_compaction")
-
-    flushed = compaction_finalize(spark.read.parquet(cur["open"])) \
-        .select("source", "file_id", "size_bytes", "group_idx",
-                "action")
-    flushed.write.mode("append").parquet(out_dir)
-    return (spark.read.parquet(out_dir)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    out = run_fold(
+        spark, stream, os.path.join(root, "fold"), step,
+        snapshots={"tails": "source string, cum_bytes long",
+                   "open": "source string, file_id long, size_bytes long, "
+                           "group_idx long"},
+        logs={"emitted": "source string, file_id long, size_bytes long, "
+                         "group_idx long, action string"})
+    return (out["emitted"].unionByName(compaction_finalize(out["open"]))
             .withColumn("group_idx",
                         F.coalesce("group_idx", F.lit(-1))
                         .cast("long")))
@@ -1828,42 +1746,29 @@ def _q_stream_scd2(spark, sf_dir):
     schema = "user_id long, ts_us long, event_id long, event_type string"
     root = tempfile.mkdtemp(prefix="entry_scd2_stream_")
     inp = os.path.join(root, "in")
-    chunk = len(pdf) // 6 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pdf, schema, inp, len(pdf) // 6 + 1)
 
-    closed_dir = os.path.join(root, "closed")
-    tails_root = os.path.join(root, "tails")
+    def step(batch, state):
+        closed, tails = scd2_apply_batch(
+            batch, state["tails"], ["user_id"], "ts_us", ["event_type"],
+            ["event_id"])
+        return {"closed": closed, "tails": tails}
+
     tails_schema = ("user_id long, version int, event_type string, "
                     "valid_from long")
-    cur = {"tails": os.path.join(tails_root, "init")}
-    spark.createDataFrame([], tails_schema).write.parquet(cur["tails"])
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    out = run_fold(spark, stream, os.path.join(root, "fold"), step,
+                   snapshots={"tails": tails_schema},
+                   logs={"closed": f"{tails_schema}, valid_to long"})
 
-    def fold(batch_df, batch_id):
-        tails = spark.read.parquet(cur["tails"])
-        closed, new_tails = scd2_apply_batch(
-            batch_df, tails, ["user_id"], "ts_us", ["event_type"],
-            ["event_id"])
-        closed.write.mode("append").parquet(closed_dir)
-        nxt = os.path.join(tails_root, f"b{batch_id}")
-        new_tails.write.parquet(nxt)
-        cur["tails"] = nxt
-
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_scd2")
-
-    closed = spark.read.parquet(closed_dir).select(
+    closed = out["closed"].select(
         "user_id", F.col("version").cast("long").alias("version"),
         F.col("event_type").alias("state"),
         F.col("valid_from").alias("valid_from_us"),
         F.col("valid_to").alias("valid_to_us"),
         F.lit(0).cast("long").alias("is_current"))
-    open_rows = spark.read.parquet(cur["tails"]).select(
+    open_rows = out["tails"].select(
         "user_id", F.col("version").cast("long").alias("version"),
         F.col("event_type").alias("state"),
         F.col("valid_from").alias("valid_from_us"),
@@ -1917,35 +1822,21 @@ def _q_stream_bottomk(spark, sf_dir):
     schema = "doc_id long, source string, n_chars long"
     root = tempfile.mkdtemp(prefix="entry_bk_stream_")
     inp = os.path.join(root, "in")
-    chunk = len(pdf) // 6 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pdf, schema, inp, len(pdf) // 6 + 1)
 
-    state_root = os.path.join(root, "state")
-    cur = {"s": os.path.join(state_root, "init")}
-    spark.createDataFrame(
-        [], "source string, rk int, hk string, doc_id long, n_chars long"
-    ).write.parquet(cur["s"])
-
-    def fold(batch_df, batch_id):
-        local = bottomk_sample(batch_df, "doc_id", ["n_chars"],
+    def step(batch, state):
+        local = bottomk_sample(batch, "doc_id", ["n_chars"],
                                group_cols=["source"], k=64)
-        state = spark.read.parquet(cur["s"])
-        merged = bottomk_merge(state, local, id_col="doc_id",
-                               group_cols=["source"], k=64)
-        nxt = os.path.join(state_root, f"b{batch_id}")
-        merged.write.parquet(nxt)
-        cur["s"] = nxt
+        return {"sample": bottomk_merge(state["sample"], local,
+                                        id_col="doc_id",
+                                        group_cols=["source"], k=64)}
 
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_bottomk")
-
-    final = spark.read.parquet(cur["s"])
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    final = run_fold(
+        spark, stream, os.path.join(root, "fold"), step,
+        snapshots={"sample": "source string, rk int, hk string, "
+                             "doc_id long, n_chars long"})["sample"]
     return bottomk_quantiles(final, "n_chars", "doc_id",
                              group_cols=["source"])
 
@@ -2170,38 +2061,18 @@ def _q_stream_cc(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="entry_cc_stream_")
     inp = os.path.join(root, "in")
     schema = "id_a long, id_b long"
-    chunk = len(pairs) // 5 + 1
-    for i in range(0, len(pairs), chunk):
-        spark.createDataFrame(pairs.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pairs, schema, inp, len(pairs) // 5 + 1)
 
-    labels_dir = os.path.join(root, "labels")
-    rep_root_dirs = os.path.join(root, "rep")
-    cur = {"rep": os.path.join(rep_root_dirs, "init")}
-    spark.createDataFrame([], "rep long, root long") \
-        .write.parquet(cur["rep"])
-    spark.createDataFrame([], "id long, first_rep long") \
-        .write.mode("append").parquet(labels_dir)
+    def step(batch, state):
+        labels, rep = cc_apply_batch(batch, state["labels"], state["rep"])
+        return {"labels": labels, "rep": rep}
 
-    def fold(batch_df, batch_id):
-        node_labels = spark.read.parquet(labels_dir)
-        rep_root = spark.read.parquet(cur["rep"])
-        new_rows, new_rep = cc_apply_batch(batch_df, node_labels,
-                                           rep_root)
-        new_rows.write.mode("append").parquet(labels_dir)
-        nxt = os.path.join(rep_root_dirs, f"b{batch_id}")
-        new_rep.write.parquet(nxt)
-        cur["rep"] = nxt
-
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_cc")
-
-    return resolve_labels(spark.read.parquet(labels_dir),
-                          spark.read.parquet(cur["rep"]))
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    out = run_fold(spark, stream, os.path.join(root, "fold"), step,
+                   snapshots={"rep": "rep long, root long"},
+                   logs={"labels": "id long, first_rep long"})
+    return resolve_labels(out["labels"], out["rep"])
 
 
 def _q_dedup_keep(spark, sf_dir):
@@ -2282,40 +2153,22 @@ def _q_stream_minhash_lsh(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="entry_lsh_stream_")
     inp = os.path.join(root, "in")
     schema = "doc_id long, text string"
-    chunk = len(docs) // 5 + 1
-    for i in range(0, len(docs), chunk):
-        spark.createDataFrame(docs.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, docs, schema, inp, len(docs) // 5 + 1)
 
-    pairs_dir = os.path.join(root, "pairs")
-    bk_dir = os.path.join(root, "buckets")
-    sh_dir = os.path.join(root, "shingles")
-    spark.createDataFrame([], "id long, band int, bh long") \
-        .write.mode("append").parquet(bk_dir)
-    spark.createDataFrame([], "id long, sh array<string>, sh_size int") \
-        .write.mode("append").parquet(sh_dir)
-    spark.createDataFrame(
-        [], "id_a long, id_b long, jaccard double") \
-        .write.mode("append").parquet(pairs_dir)
-
-    def fold(batch_df, batch_id):
-        buckets = spark.read.parquet(bk_dir)
-        shingles = spark.read.parquet(sh_dir)
-        new_pairs, new_bk, new_sh = lsh_apply_batch(
-            batch_df, buckets, shingles,
+    def step(batch, state):
+        pairs, buckets, shingles = lsh_apply_batch(
+            batch, state["buckets"], state["shingles"],
             num_hashes=32, bands=16, threshold=0.18)
-        new_pairs.write.mode("append").parquet(pairs_dir)
-        new_bk.write.mode("append").parquet(bk_dir)
-        new_sh.write.mode("append").parquet(sh_dir)
+        return {"pairs": pairs, "buckets": buckets, "shingles": shingles}
 
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_minhash_lsh")
-
-    return spark.read.parquet(pairs_dir)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    return run_fold(
+        spark, stream, os.path.join(root, "fold"), step,
+        logs={"pairs": "id_a long, id_b long, jaccard double",
+              "buckets": "id long, band int, bh long",
+              "shingles": "id long, sh array<string>, sh_size int"},
+    )["pairs"]
 
 
 def _q_simhash(spark, sf_dir):
@@ -2873,27 +2726,16 @@ def _q_stream_hll(spark, sf_dir):
     # 5 stream files ~= 5 micro-batches under maxFilesPerTrigger=1
     events.repartition(5).write.parquet(inp)
 
-    log_dir = os.path.join(root, "log")
-    spark.createDataFrame(
-        [], "event_type string, reg_idx long, max_rho long") \
-        .write.mode("append").parquet(log_dir)
-
-    def fold(batch_df, batch_id):
-        store = compact_log(spark.read.parquet(log_dir),
-                            ["event_type"])
-        hll_apply_batch(batch_df, store, "user_id",
-                        ["event_type"], p=6) \
-            .write.mode("append").parquet(log_dir)
-
-    q = (spark.readStream
-         .schema(events.schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_hll")
-
-    return compact_log(spark.read.parquet(log_dir), ["event_type"])
+    stream = (spark.readStream.schema(events.schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    log = run_fold(
+        spark, stream, os.path.join(root, "fold"),
+        lambda batch, state: {"log": hll_apply_batch(
+            batch, compact_log(state["log"], ["event_type"]), "user_id",
+            ["event_type"], p=6)},
+        logs={"log": "event_type string, reg_idx long, max_rho long"},
+    )["log"]
+    return compact_log(log, ["event_type"])
 
 
 def _q_clip_conformance(spark, sf_dir):
@@ -2957,26 +2799,17 @@ def _q_stream_conformance(spark, sf_dir):
 
     root = tempfile.mkdtemp(prefix="entry_conf_stream_")
     inp = os.path.join(root, "in")
-    chunk = len(right_pdf) // 4 + 1
-    for i in range(0, len(right_pdf), chunk):
-        spark.createDataFrame(right_pdf.iloc[i:i + chunk],
-                              schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, right_pdf, schema, inp,
+                  len(right_pdf) // 4 + 1)
 
-    out_dir = os.path.join(root, "verdicts")
-
-    def fold(batch_df, batch_id):
-        conformance_apply_batch(left, batch_df) \
-            .write.mode("append").parquet(out_dir)
-
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(inp)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", os.path.join(root, "ck"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_conformance")
-
-    verdicts = spark.read.parquet(out_dir)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(inp))
+    verdicts = run_fold(
+        spark, stream, os.path.join(root, "fold"),
+        lambda batch, _: {"verdicts": conformance_apply_batch(left, batch)},
+        logs={"verdicts": "clip_id string, status string, n_left long, "
+                          "n_right long, snr_mdb long, "
+                          "transcript_equal boolean"})["verdicts"]
     closed = verdicts.unionByName(
         finalize_missing_right(left, verdicts))
     return closed.select(
@@ -3571,11 +3404,8 @@ def _q_streaming_features(spark, sf_dir):
 
     root = tempfile.mkdtemp(prefix="entry_feat_")
     pdf = make_clips_pdf(300, seed=42)   # the oracle pins' fixture
-    chunk = len(pdf) // 4 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk],
-                              schema=clips_spark_schema()) \
-            .coalesce(1).write.mode("append").parquet(f"{root}/in")
+    _write_chunks(spark, pdf, clips_spark_schema(), f"{root}/in",
+                  len(pdf) // 4 + 1)
 
     def prepare(df):
         from dataflow_flex_templates_spark.functions.audio import (
@@ -3663,7 +3493,7 @@ def _q_asof_enrich_stream(spark, sf_dir):
          .option("path", f"{root}/out")
          .option("checkpointLocation", f"{root}/ckpt")
          .trigger(availableNow=True).start())
-    _await_or_raise(q, "asof_enrich_stream")
+    await_or_raise(q, "asof_enrich_stream")
     out = spark.read.parquet(f"{root}/out")
     return out.select(
         "user_id",
@@ -3773,19 +3603,15 @@ def _q_cep_sequence_detect(spark, sf_dir):
     inp = os.path.join(root, "in")
     # chronological chunks: stream arrival order ≈ event order, so the
     # advancing watermark never drops a yet-to-arrive event
-    chunk = len(pdf) // 8 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pdf, schema, inp, len(pdf) // 8 + 1)
     # per-user flush rows far past the end push the watermark over every
     # real event; 'flush' is not in the pattern so the automaton ignores
     # them (and the batch oracle, which never sees them, agrees)
     far = pdf["event_time"].max() + timedelta(days=2)
-    spark.createDataFrame(
-        pd.DataFrame([(u, "flush", far)
-                      for u in sorted(pdf["user_id"].unique())],
-                     columns=pdf.columns), schema=schema) \
-        .coalesce(1).write.mode("append").parquet(inp)
+    users = sorted(pdf["user_id"].unique())
+    _write_chunks(spark, pd.DataFrame([(u, "flush", far) for u in users],
+                                      columns=pdf.columns),
+                  schema, inp, len(users))
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 2).parquet(inp)
@@ -3793,13 +3619,12 @@ def _q_cep_sequence_detect(spark, sf_dir):
     matches = detect_sequence(stream, "user_id", "event_type",
                               ["view", "click", "purchase"],
                               within="12 hours")
-    out = os.path.join(root, "out")
-    q = (matches.writeStream.outputMode("append")
-         .foreachBatch(lambda df, bid: df.write.mode("append").parquet(out))
-         .option("checkpointLocation", os.path.join(root, "ckpt"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "cep_sequence_detect")
-    return (spark.read.parquet(out)
+    matches = run_fold(
+        spark, matches, os.path.join(root, "fold"),
+        lambda batch, _: {"matches": batch},
+        logs={"matches": "user_id long, match_start timestamp, "
+                         "match_end timestamp, n_events int"})["matches"]
+    return (matches
             .select("user_id",
                     F.unix_micros("match_start").alias("match_start"),
                     F.unix_micros("match_end").alias("match_end"),
@@ -3829,16 +3654,12 @@ def _q_cep_absence_detect(spark, sf_dir):
     schema = "user_id long, event_type string, event_time timestamp"
     root = tempfile.mkdtemp(prefix="entry_cep_abs_")
     inp = os.path.join(root, "in")
-    chunk = len(pdf) // 8 + 1
-    for i in range(0, len(pdf), chunk):
-        spark.createDataFrame(pdf.iloc[i:i + chunk], schema=schema) \
-            .coalesce(1).write.mode("append").parquet(inp)
+    _write_chunks(spark, pdf, schema, inp, len(pdf) // 8 + 1)
     far = pdf["event_time"].max() + timedelta(days=2)
-    spark.createDataFrame(
-        pd.DataFrame([(u, "flush", far)
-                      for u in sorted(pdf["user_id"].unique())],
-                     columns=pdf.columns), schema=schema) \
-        .coalesce(1).write.mode("append").parquet(inp)
+    users = sorted(pdf["user_id"].unique())
+    _write_chunks(spark, pd.DataFrame([(u, "flush", far) for u in users],
+                                      columns=pdf.columns),
+                  schema, inp, len(users))
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 2).parquet(inp)
@@ -3846,13 +3667,12 @@ def _q_cep_absence_detect(spark, sf_dir):
     alerts = detect_absence(stream, "user_id", "event_type",
                             trigger="click", expected="purchase",
                             within="6 hours")
-    out = os.path.join(root, "out")
-    q = (alerts.writeStream.outputMode("append")
-         .foreachBatch(lambda df, bid: df.write.mode("append").parquet(out))
-         .option("checkpointLocation", os.path.join(root, "ckpt"))
-         .trigger(availableNow=True).start())
-    _await_or_raise(q, "cep_absence_detect")
-    return (spark.read.parquet(out)
+    alerts = run_fold(
+        spark, alerts, os.path.join(root, "fold"),
+        lambda batch, _: {"alerts": batch},
+        logs={"alerts": "user_id long, trigger_time timestamp, "
+                        "deadline timestamp"})["alerts"]
+    return (alerts
             .select("user_id",
                     F.unix_micros("trigger_time").alias("trigger_us"),
                     F.unix_micros("deadline").alias("deadline_us")))
@@ -3989,17 +3809,13 @@ def _q_stream_stream_left_join(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="entry_ssloj_")
     lin, rin = os.path.join(root, "l"), os.path.join(root, "r")
     chunk = len(lrows) // 6 + 1
-    for i in range(0, len(lrows), chunk):
-        spark.createDataFrame(
-            pd.DataFrame(lrows[i:i + chunk],
-                         columns=["clip_id", "n_chars", "l_time"]),
-            left_schema).coalesce(1).write.mode("append").parquet(lin)
-    for i in range(0, len(rrows), chunk):
-        spark.createDataFrame(
-            pd.DataFrame(rrows[i:i + chunk],
-                         columns=["clip_id", "transcript", "has_t",
-                                  "r_time"]),
-            right_schema).coalesce(1).write.mode("append").parquet(rin)
+    _write_chunks(spark, pd.DataFrame(lrows, columns=["clip_id", "n_chars",
+                                                      "l_time"]),
+                  left_schema, lin, chunk)
+    _write_chunks(spark, pd.DataFrame(rrows, columns=["clip_id",
+                                                      "transcript",
+                                                      "has_t", "r_time"]),
+                  right_schema, rin, chunk)
 
     ls = (spark.readStream.schema(left_schema)
           .option("maxFilesPerTrigger", 2).parquet(lin)
@@ -4017,7 +3833,7 @@ def _q_stream_stream_left_join(spark, sf_dir):
     q = (joined.writeStream.outputMode("append").format("parquet")
          .option("path", out_dir).option("checkpointLocation", ck)
          .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_stream_left_join")
+    await_or_raise(q, "stream_stream_left_join")
     res = spark.read.parquet(out_dir).filter("clip_id <> 'flush'")
     if res.count() < len(docs):
         # outer state not fully evicted (watermark landed short): one
@@ -4029,13 +3845,12 @@ def _q_stream_stream_left_join(spark, sf_dir):
                 (rin, right_schema,
                  ("flush2", "", 1, flush_t + timedelta(days=1)),
                  ["clip_id", "transcript", "has_t", "r_time"])):
-            spark.createDataFrame(pd.DataFrame([row], columns=cols),
-                                  schema).coalesce(1) \
-                .write.mode("append").parquet(path)
+            _write_chunks(spark, pd.DataFrame([row], columns=cols),
+                          schema, path, 1)
         q = (joined.writeStream.outputMode("append").format("parquet")
              .option("path", out_dir).option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
-        _await_or_raise(q, "stream_stream_left_join")
+        await_or_raise(q, "stream_stream_left_join")
         res = spark.read.parquet(out_dir).filter(
             "clip_id NOT LIKE 'flush%'")
     return res.select(
@@ -4084,16 +3899,11 @@ def _q_stream_dedup_within_wm(spark, sf_dir):
     cols = ["clip_id", "transcript", "n_chars", "event_time"]
     root = tempfile.mkdtemp(prefix="entry_ddwm_")
     inp = os.path.join(root, "in")
-    chunk = len(base) // 6 + 1
-    for i in range(0, len(base), chunk):
-        spark.createDataFrame(pd.DataFrame(base[i:i + chunk],
-                                           columns=cols),
-                              schema).coalesce(1) \
-            .write.mode("append").parquet(inp)
+    _write_chunks(spark, pd.DataFrame(base, columns=cols), schema, inp,
+                  len(base) // 6 + 1)
     # every revision lands AFTER all base files → later micro-batch
-    spark.createDataFrame(pd.DataFrame(revs, columns=cols),
-                          schema).coalesce(1) \
-        .write.mode("append").parquet(inp)
+    _write_chunks(spark, pd.DataFrame(revs, columns=cols), schema, inp,
+                  len(revs))
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(inp)
@@ -4104,7 +3914,7 @@ def _q_stream_dedup_within_wm(spark, sf_dir):
          .option("path", out_dir)
          .option("checkpointLocation", os.path.join(root, "ck"))
          .trigger(availableNow=True).start())
-    _await_or_raise(q, "stream_dedup_within_wm")
+    await_or_raise(q, "stream_dedup_within_wm")
     return (spark.read.parquet(out_dir)
             .select("clip_id", "transcript", "n_chars"))
 

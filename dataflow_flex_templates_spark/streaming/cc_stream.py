@@ -91,8 +91,8 @@ def cc_apply_batch(batch_pairs: DataFrame, node_labels: DataFrame,
 
     Returns ``(new_node_rows, new_rep_root)``: rows to APPEND to
     ``node_labels``, and the replacement ``rep_root`` (callers using
-    a keyed store MERGE only the changed/new rows; the parquet-dir
-    harness in the driver row rewrites it — it is roots-sized, not
+    a keyed store MERGE only the changed/new rows; `streaming/fold.py`
+    commits it as a snapshot per batch — it is roots-sized, not
     nodes-sized).
     """
     edges = (batch_pairs

@@ -32,11 +32,10 @@ to the batch row's DuckDB oracle by the driver row
 Scale shape per micro-batch: one exchange+sort over the BATCH, one
 keyed join against a |keys|-sized store (broadcast in practice: one
 row per key), zero reads of accumulated data. Redelivery safety is
-the store's job, not this function's: the tails write must commit
-atomically with the batch output (the checkpointed foreachBatch /
-Iceberg MERGE transaction the repo's exactly-once sink provides) —
-a re-run batch re-reads the PRE-batch tails and reproduces the same
-assignment.
+the store's job, not this function's: `streaming/fold.py run_fold`
+commits the tails and the batch output through the exactly-once sink
+and hands a re-run batch the PRE-batch tails, so it reproduces the
+same assignment.
 
 Store shape #6 in the streaming-fold family: tails-of-versions
 (scd2), k-per-group (bottom-k), union-find (CC), inverted buckets

@@ -313,6 +313,18 @@ class ExactlyOnceTable:
             df = df.select(*[c for c in cols if c in df.columns])
         return df
 
+    def read_batch(self, spark: SparkSession, batch_id: int,
+                   schema) -> DataFrame:
+        """The rows committed batch ``batch_id`` alone wrote, read with
+        ``schema`` (order column left out). A batch that wrote no rows
+        reads as an empty frame of ``schema``, never as an older
+        batch."""
+        if not self.is_committed(batch_id):
+            raise ValueError(f"batch {batch_id} is not committed in "
+                             f"{self.path}")
+        return spark.read.schema(schema).parquet(
+            os.path.join(self._data_dir, f"batch={batch_id}"))
+
     def read_merged(self, spark: SparkSession,
                     as_of: int | None = None) -> DataFrame:
         """MERGE-on-read: last writer (highest sequence) wins per key.

@@ -27,10 +27,9 @@ is what lets the driver row `stream_zone_map` share the batch row's
 DuckDB oracle. The BOUNDS half of the merge is additionally
 idempotent (least/greatest absorb re-delivery; pinned by
 test_zonemap_redelivery_bounds_idempotent); the COUNT half is not, so
-redelivery safety for counts is the store's job — commit the store
-write atomically with the batch output, the same checkpointed
-foreachBatch / Iceberg-MERGE transaction contract as
-`shard_stream.py`.
+redelivery safety for counts is the store's job — `streaming/fold.py
+run_fold` commits the store exactly once per batch and replays a
+re-run batch against the pre-batch store, as for `shard_stream.py`.
 
 Store shape #8 in the streaming-fold family (docs/SCALE.md): after
 tails, k-per-group, union-find, inverted buckets, monotone
