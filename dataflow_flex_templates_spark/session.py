@@ -34,12 +34,10 @@ STATE_STORE_PROVIDERS = {
 def get_spark(
     app_name: str = "dataflow-flex-templates-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
     state_store: str | None = None,
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
     state_store = (state_store
                    or os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower()
                    or None)
@@ -50,7 +48,14 @@ def get_spark(
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # One shuffle partition per task slot: each shuffle stage runs
+        # in one wave of tasks. A stateful streaming query fixes its
+        # state-partition count on its checkpoint's first run (a resume
+        # restores it from the offset log), and every stateful
+        # micro-batch, the no-data eviction batch included, pays a
+        # fixed cost per state partition: a task and its state files.
+        # AQE coalesces batch shuffles below this anyway.
+        .config("spark.sql.shuffle.partitions", str(cores))
         # Legacy (non-ANSI) coercion: text sources arrive all-string and
         # the reference's expression strings (e.g. SUM(unit_price*quantity))
         # rely on implicit string→numeric casts, as BigQuery/Calcite did.

@@ -1,12 +1,23 @@
 """Streaming metrics: per-batch progress capture + latency percentiles.
 
 The reference has no metrics surface beyond log lines; BASELINE.md
-requires window-agg p99 emission latency measured from
-StreamingQueryListener progress events. Definition used here (and in
-BENCH docs): per micro-batch, emission latency = trigger execution
-wall-time (durationMs.triggerExecution) — the engine-added delay
-between a window being ready (watermark close / data availability) and
-its rows being committed. Watermark lag is recorded alongside.
+requires window-agg p99 emission latency measured from per-batch
+progress. Definition used here (and in BENCH docs): per micro-batch,
+emission latency = trigger execution wall-time
+(durationMs.triggerExecution) — the engine-added delay between a window
+being ready (watermark close / data availability) and its rows being
+committed. Watermark lag is recorded alongside.
+
+Where the progress comes from: ``SpecStreamJob`` reads it from its own
+query handles, never from a session-global listener. Each foreachBatch
+call absorbs its query's ``lastProgress`` (the batch before it; two
+py4j calls), and the end of the run absorbs each query's
+``recentProgress``, so a summary covers every batch even when a run is
+longer than Spark's retained progress ring
+(``spark.sql.streaming.numRecentProgressUpdates``). A PySpark listener
+would instead convert every progress event of every query in the
+session with dozens of py4j round trips. ``ProgressRecorder`` still
+works as a ``StreamingQueryListener`` for callers that want one.
 """
 
 from __future__ import annotations
@@ -55,11 +66,9 @@ class ProgressRecorder(StreamingQueryListener):
         pass
 
     def absorb(self, events: list[dict]) -> None:
-        """Merge progress events harvested synchronously from query
-        handles (StreamingQuery.recentProgress) with whatever the async
-        listener already delivered, deduplicating on (runId, batchId).
-        Drained runs call this so their summaries never depend on
-        listener-bus delivery timing."""
+        """Merge progress events read from query handles
+        (StreamingQuery.lastProgress / recentProgress) with those
+        already recorded, deduplicating on (runId, batchId)."""
         with self._lock:
             for p in events:
                 k = (p.get("runId"), p.get("batchId"))
@@ -68,29 +77,20 @@ class ProgressRecorder(StreamingQueryListener):
                     self.progress.append(p)
 
     # analysis -------------------------------------------------------------
-    def _events(self, run_ids: set | None = None) -> list[dict]:
-        """Progress events, optionally restricted to a set of query
-        runIds. The listener is session-global and delivery is async,
-        so without the filter a recorder attached moments after another
-        query stopped can receive that query's in-flight events — a
-        job's summary must count only its OWN runs."""
+    def _events(self) -> list[dict]:
         with self._lock:
-            evts = list(self.progress)
-        if run_ids is None:
-            return evts
-        ids = {str(r) for r in run_ids}
-        return [p for p in evts if str(p.get("runId")) in ids]
+            return list(self.progress)
 
-    def batch_latencies_ms(self, run_ids: set | None = None) -> list[float]:
+    def batch_latencies_ms(self) -> list[float]:
         out = []
-        for p in self._events(run_ids):
+        for p in self._events():
             d = p.get("durationMs", {})
             v = d.get("triggerExecution")
             if v is not None and p.get("numInputRows", 0) > 0:
                 out.append(float(v))
         return out
 
-    def state_series(self, run_ids: set | None = None) -> list[dict]:
+    def state_series(self) -> list[dict]:
         """Per-batch state-store footprint, sorted by batchId — the
         evidence trail for the bounded-state claims (bloom_dedup's
         O(1) words/shard, dedup_state's watermark eviction): each
@@ -99,7 +99,7 @@ class ProgressRecorder(StreamingQueryListener):
         while cumulative input keeps growing; an unbounded one grows
         linearly with it."""
         out = []
-        for p in self._events(run_ids):
+        for p in self._events():
             ops = p.get("stateOperators") or []
             if not ops:
                 continue
@@ -114,9 +114,9 @@ class ProgressRecorder(StreamingQueryListener):
         return sorted(out, key=lambda d: (d["batch_id"] is None,
                                           d["batch_id"]))
 
-    def summary(self, run_ids: set | None = None) -> dict:
-        evts = self._events(run_ids)
-        lat = self.batch_latencies_ms(run_ids)
+    def summary(self) -> dict:
+        evts = self._events()
+        lat = self.batch_latencies_ms()
         rows = sum(p.get("numInputRows", 0) for p in evts)
         # late rows dropped by the watermark (north_rule: "late rows
         # dropped + counted") — reported per stateful operator

@@ -32,6 +32,7 @@ prepare stage run on this engine.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from typing import Callable
@@ -50,6 +51,7 @@ from dataflow_flex_templates_spark.plans.compiler import (
 from dataflow_flex_templates_spark.spec.model import JobSpec, Target, TargetType
 from dataflow_flex_templates_spark.spec.refactor import refactor_job_spec
 from dataflow_flex_templates_spark.spec.validator import validate_job_spec
+from dataflow_flex_templates_spark.streaming.metrics import ProgressRecorder
 from dataflow_flex_templates_spark.streaming.sink import ExactlyOnceTable
 
 #: Tie-break width: 2^20 hash buckets within one event-time millisecond.
@@ -179,6 +181,29 @@ class MultiQuery:
         self._done()
 
 
+class _ProgressTap:
+    """A foreachBatch function that first records its query's previous
+    batch (``lastProgress``) and then runs ``fn``. Every batch is thus
+    recorded while the run lasts, however few of them Spark's progress
+    ring (``spark.sql.streaming.numRecentProgressUpdates``) retains."""
+
+    def __init__(self, fn: Callable[[DataFrame, int], None],
+                 recorder: ProgressRecorder) -> None:
+        self.fn = fn
+        self.recorder = recorder
+        self.query = None  # set by attach() once the query has started
+
+    def attach(self, query):
+        self.query = query
+        return query
+
+    def __call__(self, df: DataFrame, batch_id: int) -> None:
+        last = self.query.lastProgress if self.query is not None else None
+        if last is not None:
+            self.recorder.absorb([json.loads(last.json)])
+        self.fn(df, batch_id)
+
+
 class SpecStreamJob:
     """Run a JobSpec continuously over a streaming source.
 
@@ -279,7 +304,6 @@ class SpecStreamJob:
         self.http_fn = http_fn
         self.action_results: list[dict] = []
         self._recorder = None
-        self._run_ids: set[str] = set()
         #: Optional second stream (transcripts): the north_rule's
         #: stateful clip↔transcript stream-stream join keyed on clip_id
         #: runs UPSTREAM of the target pipeline — joined rows flow into
@@ -462,27 +486,23 @@ class SpecStreamJob:
 
     def metrics_summary(self) -> dict | None:
         """Per-batch metrics summary (latency percentiles, input rows,
-        late rows dropped by the watermark) — populated once the job
-        has started; None before that. Restricted to THIS job's query
-        runs: the listener is session-global and event delivery is
-        async, so another job's (or a prior run's) in-flight events
-        must not leak into this job's accounting."""
+        late rows dropped by the watermark) of the latest run — None
+        before the job has started. Complete once the run is over: the
+        last batches' progress is taken when the queries end."""
         if self._recorder is None:
             return None
-        return self._recorder.summary(run_ids=self._run_ids or None)
+        return self._recorder.summary()
 
     def start(self, spark: SparkSession, available_now: bool = True
               ) -> "MultiQuery":
         from dataflow_flex_templates_spark.graph.actions import run_actions
-        from dataflow_flex_templates_spark.streaming.metrics import (
-            ProgressRecorder,
-        )
 
-        # Metrics listener: latency + late-drop accounting for every
-        # query this job launches (the progress events also drive the
-        # silent-data-loss warning in run_to_completion).
-        self._recorder = ProgressRecorder()
-        spark.streams.addListener(self._recorder)
+        # Latency + late-drop accounting for every query this job
+        # launches (it also drives the silent-data-loss warning in
+        # run_to_completion), read from the queries' own handles: a
+        # session-global listener would cost dozens of py4j calls per
+        # progress event of every query in the session.
+        rec = self._recorder = ProgressRecorder()
 
         # D1 preload phases before any query launches
         # (GcpToNeo4j.run:173; JobSpec.getPreloadActions:81-89).
@@ -521,16 +541,17 @@ class SpecStreamJob:
                 row_stream = lww_dedup_stream(
                     row_stream, self.state_dedup_key,
                     event_time_col=self.event_time_col)
+            tap = _ProgressTap(self._write_batch, rec)
             writer = (row_stream.writeStream
                       .outputMode("update" if self.state_dedup_key
                                   else "append")
-                      .foreachBatch(self._write_batch)
+                      .foreachBatch(tap)
                       .option("checkpointLocation",
                               os.path.join(self.checkpoint_dir, "rows"))
                       .queryName(f"spec_stream_{self.source_name}"))
             if available_now:
                 writer = writer.trigger(availableNow=True)
-            queries.append(writer.start())
+            queries.append(tap.attach(writer.start()))
         for t in self._win_targets:
             stream = self.read_stream(spark)
             if t.transform.join is not None:
@@ -584,49 +605,21 @@ class SpecStreamJob:
             # state, the documented streaming semantics).
             mode = ("append" if t.transform.window.kind == "session"
                     else "update")
+            tap = _ProgressTap(sink, rec)
             writer = (plan.writeStream
                       .outputMode(mode)
-                      .foreachBatch(sink)
+                      .foreachBatch(tap)
                       .option("checkpointLocation",
                               os.path.join(self.checkpoint_dir,
                                            f"win_{t.name.lower()}"))
                       .queryName(f"spec_stream_win_{t.name}"))
             if available_now:
                 writer = writer.trigger(availableNow=True)
-            queries.append(writer.start())
-        self._run_ids = {str(q.runId) for q in queries}
-        rec = self._recorder  # this run's: a restart replaces the field
-        return MultiQuery(queries, on_done=lambda: self._detach_recorder(
-            spark, queries, rec))
-
-    def _detach_recorder(self, spark: SparkSession, queries: list,
-                         recorder: ProgressRecorder) -> None:
-        """Once the job's queries are over: take their progress from the
-        query handles and drop the session-global listener. A listener
-        left attached is called for every progress event of every later
-        query in the session."""
-        import json as _json
-
-        # Listener events are delivered asynchronously and can lag
-        # arbitrarily under load (a 15 s settle wait was observed to
-        # miss a whole run's events). The query handles' recentProgress
-        # is populated synchronously by the micro-batch thread, so
-        # harvest it directly — a drained run's summary does not depend
-        # on listener-bus timing at all; the listener serves continuous
-        # (non-drained) monitoring.
-        harvested = []
-        for q_ in queries:
-            for j in q_.recentProgress:
-                try:
-                    harvested.append(
-                        _json.loads(getattr(j, "json", None) or j))
-                except Exception:
-                    pass
-        recorder.absorb(harvested)
-        try:
-            spark.streams.removeListener(recorder)
-        except Exception:
-            pass
+            queries.append(tap.attach(writer.start()))
+        # the last batches' progress (the foreachBatch calls only ever
+        # see the batch before theirs) once the run is over
+        return MultiQuery(queries, on_done=lambda: rec.absorb(
+            [json.loads(p.json) for q in queries for p in q.recentProgress]))
 
     def run_to_completion(self, spark: SparkSession, timeout_s: int = 600):
         from dataflow_flex_templates_spark.graph.actions import (
@@ -647,7 +640,7 @@ class SpecStreamJob:
             raise RuntimeError(
                 f"SpecStreamJob: availableNow run timed out ({timeout_s} s)"
                 " — refusing to treat partial target tables as complete")
-        q.stop()  # harvests the queries' progress, drops the listener
+        q.stop()  # takes the queries' last progress
         # Silent data loss is the #1 streaming footgun: if the watermark
         # dropped a meaningful share of input rows (out-of-order input
         # beyond the configured delay), say so loudly instead of

@@ -392,6 +392,133 @@ def test_kill_and_resume(spark, stream_env):
     assert a[cols].equals(b[cols])
 
 
+def _state_partitions(checkpoint: str) -> int:
+    """State partitions of a stateful query's first operator."""
+    return sum(1 for d in os.listdir(os.path.join(checkpoint, "state", "0"))
+               if d.isdigit())
+
+
+def test_state_partitions_match_task_slots(spark, stream_env):
+    """The session runs one shuffle partition per task slot, so a
+    drained windowed query has that many state partitions, and each
+    windowed batch commits at most that many parquet parts."""
+    root, inp, pdf, job = stream_env
+    slots = spark.sparkContext.defaultParallelism
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == slots
+    assert _state_partitions(
+        os.path.join(root, "ckpt", "win_codecwindow")) == slots
+    tbl = job.tables["CodecWindow"]
+    assert tbl.committed_batches()
+    for b in tbl.committed_batches():
+        d = os.path.join(tbl.path, "data", f"batch={b}")
+        parts = [f for f in os.listdir(d)
+                 if f.startswith("part-") and f.endswith(".parquet")]
+        assert len(parts) <= slots, (b, parts)
+
+
+def test_resume_keeps_first_run_state_partitions(spark, stream_env):
+    """A checkpoint first started at 8 shuffle partitions keeps 8 state
+    partitions when it resumes under the session default (Spark
+    restores the count from the offset log), and the resumed run's
+    merged tables equal the uninterrupted run's."""
+    from dataflow_flex_templates_spark.streaming.spec_stream import (
+        SpecStreamJob,
+    )
+
+    root, inp, pdf, job = stream_env
+    inp2 = os.path.join(root, "input_p8")
+    os.makedirs(inp2)
+    files = sorted((f for f in os.listdir(inp)
+                    if f.startswith("part-") and f.endswith(".parquet")),
+                   key=lambda f: os.path.getmtime(os.path.join(inp, f)))
+
+    def run():
+        j = SpecStreamJob(
+            _parse(_spec()),
+            input_dir=inp2,
+            input_schema=clips_spark_schema(),
+            output_dir=os.path.join(root, "out_p8"),
+            checkpoint_dir=os.path.join(root, "ckpt_p8"),
+            watermark="60 seconds",
+            max_files_per_trigger=2,
+            prepare_fn=prepare_clips, prepare_preserves="*",
+        )
+        j.run_to_completion(spark, timeout_s=900)
+        return j
+
+    half = len(files) // 2
+    for f in files[:half]:
+        shutil.copy(os.path.join(inp, f), inp2)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        run()
+    finally:
+        spark.conf.set(key, old)
+    ckpt = os.path.join(root, "ckpt_p8", "win_codecwindow")
+    assert _state_partitions(ckpt) == 8
+
+    for f in files[half:]:
+        shutil.copy(os.path.join(inp, f), inp2)
+    j = run()
+    assert _state_partitions(ckpt) == 8
+    for t in ("Clip", "ENCODED_AS", "CodecWindow"):
+        assert _merged_sorted(spark, j, t).equals(
+            _merged_sorted(spark, job, t)), t
+
+
+def test_metrics_cover_runs_longer_than_progress_ring(spark, stream_env):
+    """metrics_summary() counts every batch and every input row of a
+    run longer than Spark's retained progress ring, and the job never
+    attaches a session-global listener."""
+    from dataflow_flex_templates_spark.streaming.spec_stream import (
+        SpecStreamJob,
+    )
+
+    root, inp, pdf, job = stream_env
+
+    def n_listeners():
+        return len(spark._jsparkSession.streams().listListeners())
+
+    n0 = n_listeners()
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "3")
+    try:
+        j = SpecStreamJob(
+            _parse(_spec()),
+            input_dir=inp,
+            input_schema=clips_spark_schema(),
+            output_dir=os.path.join(root, "out_ring"),
+            checkpoint_dir=os.path.join(root, "ckpt_ring"),
+            watermark="60 seconds",
+            max_files_per_trigger=1,
+            prepare_fn=prepare_clips, prepare_preserves="*",
+        )
+        q = j.start(spark, available_now=True)
+        assert n_listeners() == n0
+        assert q.awaitTermination(900), "stream not drained in 900s"
+        q.stop()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert n_listeners() == n0
+
+    def batches(query_dir):
+        d = os.path.join(root, "ckpt_ring", query_dir, "commits")
+        return sum(1 for f in os.listdir(d) if f.isdigit())
+
+    n_rows, n_win = batches("rows"), batches("win_codecwindow")
+    assert n_rows >= 6 and n_win >= 6, (n_rows, n_win)
+    s = j.metrics_summary()
+    assert s["batches"] == n_rows + n_win, s
+    # each of the two queries reads every input row once
+    assert s["input_rows"] == 2 * len(pdf), s
+
+
 def test_reset_w8(spark, stream_env):
     """W8 reset (Neo4jConnection.resetDatabase analogue): output and
     checkpoint dropped; a fresh run repopulates."""
